@@ -16,9 +16,11 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import statistics
 import sys
 import time
+from pathlib import Path
 
 # Headline set: spans scans/filters/aggs, multi-way joins, windows,
 # as-of, set-heavy dedup, text, vectors, and streaming.
@@ -165,47 +167,31 @@ EXTRA_RUN_UNDER_SEC = 2.5
 # "fixed" in both the stdout line and bench_results.json.
 BENCH_FIXED_N = 46  # q1..sample_importance_weighted (rounds 1-5 core)
 
-# r13 line-visibility contract: the driver reads the LAST ~2000 chars
-# of stdout and diffs the line's "queries" dict against the previous
-# round's line — a query present last round but folded into "omitted"
-# this round counts as DROPPED (r12 lost 8 timings that way when 4 new
-# queries pushed them past the cap). All 96 names cannot fit (the 96
-# names alone are ~2200 chars, see OPTIMIZATION_r13.md), so the line
-# budget is spent by priority: (0) every query the previous round's
-# line reported — NEVER omitted, so queries_dropped stays 0; (1) the
-# fixed46 core; (2) the rest, slowest kept first. Full-precision
-# timings for every query always live in bench_results.json.
-PREV_LINE_REPORTED = frozenset(
-    # the 65 queries in BENCH_r12.json's parsed line
-    [
-        "q1_pricing_summary", "q3_shipping_priority", "q10_returned_items",
-        "agg_cube", "agg_grouping_sets", "dedup_minhash", "sim_knn_cosine",
-        "sim_ann_lsh", "stream_tumbling_window", "stream_stateful_user_totals",
-        "q2_min_cost_supplier", "q21_waiting_supplier",
-        "range_join_interval_overlap", "topk_heavy_hitters", "profile_columns",
-        "dedup_minhash_capped", "sim_ann_ivf_fixed", "dq_checks",
-        "dedup_containment", "events_funnel", "embedding_quality_stats",
-        "dedup_chunk_global", "dedup_semantic_semdedup",
-        "pipeline_corpus_curation", "graph_pagerank_bipartite",
-        "events_changepoint_cusum_filled", "dedup_bloom_incremental",
-        "agg_median_mad", "sim_range_search", "graph_degree_distribution",
-        "dq_functional_dependency", "orders_pareto_concentration",
-        "text_surprisal_lm", "dedup_exact_substring_spans",
-        "stream_dedup_minhash", "pipeline_dedup_funnel",
-        "text_boilerplate_chunks", "text_bm25_topk", "graph_triangle_count",
-        "stream_corpus_ingest", "text_inverted_index",
-        "orders_market_basket_rules", "orders_rfm_segments",
-        "cluster_kmeans_lloyd", "sim_ann_ivf_lloyd", "agg_histogram_equidepth",
-        "stream_distinct_kmv", "stream_percentile_grid", "sim_ann_pq_adc",
-        "sim_ann_pq_lloyd", "sim_ann_ivfpq", "events_attribution_touch",
-        "cluster_kmeans_converged", "stream_ann_ingest", "sim_rank_fusion_rrf",
-        "stream_sample_reservoir", "dq_embedding_drift",
-        "sim_ann_ivfpq_residual", "sql_facade_q1_pricing",
-        "sql_facade_join_agg", "sql_facade_manifest_table",
-        "table_changefeed", "stream_table_changefeed", "sql_facade_merge_dml",
-        "stream_changefeed_matview",
+# Line-visibility contract: the round's bench reader parses the LAST
+# ~2000 chars of stdout and diffs the line's "queries" dict against
+# the previous round's line — a query present last round but folded
+# into "omitted" this round counts as DROPPED. All 96 names cannot fit (the names
+# alone are ~2200 chars), so the line budget is spent by priority:
+# (0) every query the latest round's line reported (the "parsed"
+# queries of the highest-numbered BENCH_r<N>.json) — NEVER omitted;
+# (1) the fixed46 core; (2) the rest, slowest kept first.
+# Full-precision timings for every query live in bench_results.json.
+_HERE = Path(__file__).resolve().parent
+
+
+def _line_queries(artifact: Path) -> dict[str, float]:
+    """The "queries" dict of a BENCH_r<N>.json artifact's parsed line."""
+    return json.loads(artifact.read_text())["parsed"]["queries"]
+
+
+def _latest_line_reported() -> frozenset[str]:
+    rounds = [
+        (int(m.group(1)), p)
+        for p in _HERE.iterdir()
+        if (m := re.fullmatch(r"BENCH_r(\d+)\.json", p.name))
     ]
-)
+    return frozenset(_line_queries(max(rounds)[1]) if rounds else ())
+
 
 # Mid-run drift self-diagnosis (r12 lesson: the driver's 32-core run
 # degraded progressively — untouched controls at positions >=35 read
@@ -230,92 +216,19 @@ DRIFT_EVERY = 15
 # topk_heavy_hitters, sessionize, rollup, triangle) shapes; none of
 # their code has changed since r6 (graph_triangle_count shares graph.py
 # with r11's pagerank change but its own function is untouched).
-HOST_CONTROLS = {  # query -> BENCH_r08 driver seconds
-    "q1_pricing_summary": 1.38,
-    "agg_cube": 0.60,
-    "topk_per_group": 0.38,
-    "sessionize_events": 0.44,
-    "hypertable_rollup": 0.34,
-    "topk_heavy_hitters": 0.64,
-    "profile_columns": 0.91,
-    "events_funnel": 0.37,
-    "agg_median_mad": 0.81,
-    "graph_triangle_count": 2.14,
-    "asof_join": 0.36,
-}
-
-# Standing measurement notes, copied into every bench_results.json so
-# they survive regeneration (the artifact is rewritten per run).
-BENCH_NOTES = {
-    "perf_watch_r12": (
-        "the round-11 verdict flagged range_join_interval_overlap "
-        "(0.53->1.37 raw) and stream_stateful_user_totals (2.24->4.46 "
-        "raw) for re-measurement; neither module changed since r5/r7. "
-        "Round-12 quiet-host re-measure WITH the 11-control cohort "
-        "(host_factor 1.29): range_join 0.99s in-suite, solo warm "
-        "series [1.43, 1.23, 0.97, 0.87, 0.80] -> ~0.85s median "
-        "(~0.66 normalized vs the r10 driver 0.53 — inside noise for "
-        "a sub-second query dominated by fixed per-query overhead); "
-        "stream_stateful_user_totals 1.75s in-suite / ~1.8s solo, "
-        "BELOW its r10 driver number 2.24 even RAW. Both r11 spikes "
-        "were host load, not drift; the joinless sweep-line plan and "
-        "the stateful plan are unchanged (test_plan_audit pins them)."
-    ),
-    "host_calibration_r10": (
-        "the round-9 verdict flagged pagerank/containment/dq_checks "
-        "for re-measurement (>1.3x vs r8). Round-10 calibration on "
-        "UNTOUCHED controls: scan-light queries match r8 (q1 "
-        "1.38->1.45, topk_per_group 0.38->0.41) but every shuffle-"
-        "heavy control reads 2.3-3.2x above its r8 driver number on "
-        "this builder host (agg_cube 0.60->1.92, topk_heavy_hitters "
-        "0.64->1.67, sessionize_events 0.44->1.02, hypertable_rollup "
-        "0.34->1.06 - none of these modules changed since r5). The "
-        "three flagged queries read 1.29-1.67x, BELOW the untouched-"
-        "control elevation, so the flag is host class (shuffle-stage "
-        "latency on this container), not code drift. Read the round-10 "
-        "driver artifact against r8 per-query before concluding "
-        "anything from builder-host absolute times. The round-10 "
-        "closing full run confirms the read: 66 shared queries = "
-        "1.355x vs BENCH_r09 with the elevation uniform across "
-        "UNTOUCHED modules (median 1.269; worst movers dedup_minhash "
-        "2.16x, agg_grouping_sets 2.08x - r2-r6 code, unchanged for "
-        "rounds), while the three r9-flagged queries read AT or BELOW "
-        "their r9 numbers relative to that baseline (dq_checks 0.94x, "
-        "dedup_containment 0.95x, pagerank 1.2x vs a 1.27x median)."
-    ),
-    "fixed46_variance_r9": (
-        "five same-code full runs during round 9 read fixed46 = "
-        "33.8 / 42.9 / 42.6 / 35.8 / 33.1s with DIFFERENT queries "
-        "spiking 2-5x each loaded run (ivf_fixed 1.3->7.3->1.3, "
-        "pagerank 2.5->6.7->2.7, containment 1.7->3.7->2.0) — "
-        "noisy-neighbor host, not code drift (none of those modules "
-        "changed in round 9; the closing quiet run put every spike "
-        "back at its r8 level, 0.992x on the 67 shared queries). Read "
-        "round-over-round deltas from the per-query MEDIANS of the "
-        "quietest run; a lone 2x move on an untouched query is load."
-    ),
-    "fixed46_variance": (
-        "three same-code full runs in one round-8 session measured "
-        "fixed46 = 32.7 / 37.9 / 41.6s under rising background load — "
-        "absolute totals swing ~1.3x with host conditions; compare "
-        "per-query ratios within ONE run, and prefer the driver's "
-        "clean-state BENCH_r{N} for round-over-round reads."
-    ),
-    "dedup_minhash_capped": (
-        "r5->r7 'drift' (1.42->2.09s) root-caused round 8: best-of-5 solo "
-        "run gives [6.9, 2.33, 2.17, 1.84, 1.87] -> best 1.84s. The op is "
-        "warm-up-sensitive (shingle-set build); crossing the old 2.0s "
-        "best-of-3 cutoff REDUCED its repetitions exactly when noise "
-        "dominated. Cutoff raised to 2.5s; not operator drift."
-    ),
-    "orders_rfm_segments": (
-        "distributed_ntile trades ~2x at sf0.1 for scale: 3-SF curve "
-        "(global-window form -> distributed form) 1.03->2.08s at sf0.1, "
-        "8.16->6.36s at sf10; measured sf1 point (round 8, solo best-of-3): "
-        "3.56s. Crossover ~sf1; built for the 100TB side. "
-        "See SCALE.md round-7 batch 5."
-    ),
-}
+HOST_CONTROLS = (
+    "q1_pricing_summary",
+    "agg_cube",
+    "topk_per_group",
+    "sessionize_events",
+    "hypertable_rollup",
+    "topk_heavy_hitters",
+    "profile_columns",
+    "events_funnel",
+    "agg_median_mad",
+    "graph_triangle_count",
+    "asof_join",
+)
 
 
 def main() -> None:
@@ -468,9 +381,10 @@ def main() -> None:
     # divide any query's raw time by it before calling drift.
     import math
 
+    pins = _line_queries(_HERE / "BENCH_r08.json")
     control_ratios = {
-        q: round(timings[q] / ref, 3)
-        for q, ref in HOST_CONTROLS.items()
+        q: round(timings[q] / pins[q], 3)
+        for q in HOST_CONTROLS
         if q in timings and timings[q] > 0
     }
     host_factor = (
@@ -520,13 +434,11 @@ def main() -> None:
         "drift_series": drift_series,
         "drift": drift,
         "sf": sf_val,
-        "notes": BENCH_NOTES,
     }
     if errors:
         detail["errors"] = errors
     try:
-        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "bench_results.json"), "w") as fh:
+        with open(_HERE / "bench_results.json", "w") as fh:
             json.dump(detail, fh, indent=1)
     except OSError:
         pass  # a read-only checkout must not kill the stdout line
@@ -534,12 +446,13 @@ def main() -> None:
     # The driver parses the summary from the LAST 2000 chars of stdout
     # (BENCH_r06 lost its whole per-query dict to a 2009-char line).
     # Emit ONE compact line, hard-capped under that window: 1-decimal
-    # timings, short metric, and the PREV_LINE_REPORTED eviction policy
+    # timings, short metric, and the line-visibility eviction policy
     # (see its comment) — should the budget still overflow, the FASTEST
     # lowest-priority entries fold into an "omitted" summary (their
     # full timings stay in bench_results.json; "value" always covers
     # every query that ran).
     line_queries = {n: round(t, 1) for n, t in timings.items()}
+    protected = _latest_line_reported()
     omitted_n, omitted_sec = 0, 0.0
 
     def _line() -> str:
@@ -571,7 +484,7 @@ def main() -> None:
     # the previous round's line is NEVER evicted (priority 0), so the
     # driver's round-over-round diff sees zero dropped queries.
     def _evict_rank(name: str) -> tuple[int, float]:
-        if name in PREV_LINE_REPORTED:
+        if name in protected:
             prio = 0
         elif name in fixed_names:
             prio = 1
@@ -581,7 +494,7 @@ def main() -> None:
 
     out = _line()
     for name in sorted(line_queries, key=_evict_rank):
-        if len(out) <= 1990 or name in PREV_LINE_REPORTED:
+        if len(out) <= 1990 or name in protected:
             break
         omitted_sec += line_queries.pop(name)
         omitted_n += 1

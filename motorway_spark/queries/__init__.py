@@ -13,13 +13,6 @@ the registry is fully populated.
 from motorway_spark.queries.registry import QUERIES, ORACLES, query, get_queries, get_oracles
 
 # Populate the registry.
-#
-# ORDER MATTERS: the driver's correctness sweep runs queries in
-# registration order under a global budget (round 1 stopped at entry 50,
-# leaving everything after setops unverified).  Families that have never
-# had a driver CORRECTNESS row therefore register FIRST; the families
-# already verified green in round 1 (relational, tpch_extra, joins,
-# windows) register LAST.
 from motorway_spark.queries import changefeed  # noqa: F401,E402
 from motorway_spark.queries import dataquality  # noqa: F401,E402
 from motorway_spark.queries import spatial  # noqa: F401,E402
@@ -35,9 +28,6 @@ from motorway_spark.queries import scalar_functions  # noqa: F401,E402
 from motorway_spark.queries import scans  # noqa: F401,E402
 from motorway_spark.queries import streaming_queries  # noqa: F401,E402
 from motorway_spark.queries import setops  # noqa: F401,E402
-# tpch_extra/joins before relational/windows: they carry this round's new
-# entries (q11/q13/q16/q20, recursive CTE, lateral, salted join), which
-# should sweep before families that are fully green already.
 from motorway_spark.queries import sampling  # noqa: F401,E402
 from motorway_spark.queries import graph  # noqa: F401,E402
 from motorway_spark.queries import tpch_extra  # noqa: F401,E402
@@ -45,706 +35,5 @@ from motorway_spark.queries import joins  # noqa: F401,E402
 from motorway_spark.queries import relational  # noqa: F401,E402
 from motorway_spark.queries import windows  # noqa: F401,E402
 from motorway_spark.queries import sql_facade  # noqa: F401,E402
-
-# Explicit sweep priority (round 12). The driver's per-round
-# correctness budget is ~50 queries, taken in registration order.
-# Latest-row distribution after round 11: r11:50 / r10:48 / r09:46 /
-# r08:48 / r07:48 / r06:3, zero fails ever. Head = the three queries
-# NEW in round 12 (the changefeed pair + the DML façade), then the two
-# queries whose code changed in round 12 after their latest driver row
-# (stream_scd2_current rebased onto the table changefeed;
-# sim_ann_ivfpq_residual retuned to coarse6/rerank200), then the three
-# r06-stale stragglers the r11 budget cut, then the ENTIRE r07 cohort.
-# The two permanent no_oracle entries (sample_fraction, sim_ann_ivf)
-# are pushed to the VERY BACK via _SWEEP_BACK so driver rows stop
-# being spent on documented rows-only checks (their oracle-exact twins
-# carry the evidence).
-_SWEEP_PRIORITY = [
-    # -- new in round 12 --
-    "table_changefeed",  # batch CDF over a manifest table
-    "stream_table_changefeed",  # streaming CDF source, same oracle
-    "sql_facade_merge_dml",  # INSERT/MERGE/DELETE as SQL strings
-    "stream_changefeed_matview",  # CDC-driven incremental aggregate view
-    # -- code changed in round 12 after the latest driver row --
-    "stream_scd2_current",  # consumes the table changefeed now
-    "sim_ann_ivfpq_residual",  # ship point moved to coarse6/rerank200
-    # -- latest driver row is ROUND 6 (the 3 the r11 budget cut) --
-    "unpivot_metrics",
-    "win_distribution",
-    "zorder_clustering",
-    # -- latest driver row is ROUND 7 (retire the cohort) --
-    "agg_distinct_kmv",
-    "agg_median_mad",
-    "cluster_kmeans_lloyd",
-    "dedup_bloom_incremental",
-    "dedup_cross_source_matrix",
-    "dedup_exact_substring_spans",
-    "dedup_minhash_cap_loss",
-    "dq_benford_first_digit",
-    "dq_functional_dependency",
-    "dq_split_drift_chi2",
-    "events_forecast_seasonal_naive",
-    "events_twap_daily",
-    "graph_degree_distribution",
-    "graph_triangle_count",
-    "orders_market_basket_rules",
-    "orders_pareto_concentration",
-    "pipeline_dedup_funnel",
-    "q10_returned_items",
-    "q2_min_cost_supplier",
-    "q5_local_supplier",
-    "q9_profit",
-    "scan_csv",
-    "scan_csv_corrupt",
-    "scan_json",
-    "scan_orc",
-    "sim_ann_ivf_lloyd",
-    "sim_range_search",
-    "stream_corpus_ingest",
-    "stream_dedup",
-    "stream_dedup_minhash",
-    "stream_distinct_kmv",
-    "stream_filter_route",
-    "stream_kafka_topic_agg",
-    "stream_longpoll_agg",
-    "stream_session_window",
-    "stream_sliding_window",
-    "stream_stateful_user_totals",
-    "stream_stateful_user_totals_tws",
-    "stream_static_enrich",
-    "stream_stream_join",
-    "stream_topk_heavy_hitters",
-    "stream_tumbling_window",
-    "text_bm25_topk",
-    "text_boilerplate_chunks",
-    "text_inverted_index",
-    "text_surprisal_lm",
-    "win_ewma_finite",
-]
-
-# Permanent rows-only entries (ROWS_ONLY.md): registered and locally
-# swept like everything else, but LAST in driver order — a driver row
-# spent here is a guaranteed "err: no_oracle", and their oracle-exact
-# twins (sample_stratified_exact, sim_ann_ivf_fixed/_lloyd) already
-# gate the same code paths.
-_SWEEP_BACK = [
-    "sample_fraction",
-    "sim_ann_ivf",
-]
-
-# Round-11 head kept below: everything here has an r11 driver row
-# already.
-_SWEEP_PRIORITY_R11 = [
-    # -- new in round 11 --
-    "sql_facade_manifest_table",  # write via sink, read back via ONE string
-    # -- code changed in round 11 after the latest driver row: first --
-    "graph_pagerank_bipartite",  # degree via COUNT window, lazy cache fill
-    "stream_ann_ingest",  # sink append proof now uses exact klo/khi stats
-    # -- latest driver row is ROUND 6 (all 50: retire the cohort) --
-    "dedup_embedding_cosine",
-    "dedup_exact",
-    "dedup_exact_keep_first",
-    "dedup_minhash",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "events_changepoint_cusum_filled",
-    "fn_array",
-    "fn_array_ops",
-    "fn_datetime",
-    "fn_datetime_agg",
-    "fn_json",
-    "fn_json_build",
-    "fn_map_explode",
-    "fn_string",
-    "fn_string_split",
-    "hypertable_rollup",
-    "multimodal_frame_sample",
-    "multimodal_metadata",
-    "multimodal_resize",
-    "order_limit",
-    "pipeline_engagement_report",
-    "profile_columns",
-    "range_join_point_in_interval",
-    "sample_fraction",
-    "scd2_intervals",
-    "sessionize_events",
-    "set_except",
-    "set_intersect",
-    "set_union_all",
-    "set_union_distinct",
-    "sim_ann_ivf",
-    "sim_knn_cosine",
-    "sim_pairs_threshold",
-    "text_commonness_score",
-    "text_fingerprint",
-    "text_lang_id",
-    "text_quality",
-    "text_stats",
-    "text_tfidf_topterms",
-    "text_token_count",
-    "topk_heavy_hitters",
-    "topk_per_group",
-    "udf_grouped_minmax",
-    "udf_pandas_normalize",
-    "udf_python_row_normalize",
-    "udtf_char_histogram",
-    "unpivot_metrics",
-    "win_distribution",
-    "zorder_clustering",
-]
-
-# Round-10 head kept below: everything here has an r10 driver row already.
-_SWEEP_PRIORITY_R10 = [
-    # -- new in round 10 --
-    "sim_ann_ivfpq_residual",  # FAISS-parity residual IVFPQ, recall .77@probe4
-    "sql_facade_q1_pricing",  # one ANSI string, two engines (Q1)
-    "sql_facade_q6_revenue",  # façade Q6 tight-filter aggregate
-    "sql_facade_exists_semijoin",  # façade correlated EXISTS (Q4)
-    "sql_facade_topk_window",  # façade window-rank top-k
-    "sql_facade_join_agg",  # façade join+aggregate
-    # -- code changed in round 10 after the latest driver row: first --
-    "stream_ann_ingest",  # flake retry rides a durable checkpoint now
-    "sim_rank_fusion_rrf",  # branches materialized before cache swap
-    "cluster_kmeans_converged",  # empty-assignment movement=None parity
-    # -- latest driver row is ROUND 5 (all 40: retire the cohort) --
-    "wordcount",
-    "q1_pricing_summary",
-    "q6_forecast_revenue",
-    "agg_basic",
-    "agg_stats",
-    "agg_collect",
-    "agg_rollup",
-    "agg_cube",
-    "agg_percentile",
-    "agg_approx_distinct",
-    "agg_salted_skew",
-    "q12_shipmode_buckets",
-    "q14_promo_share",
-    "q18_large_orders",
-    "q19_disjunctive",
-    "q22_acctbal_subquery",
-    "agg_having",
-    "sql_api_q7_volume",
-    "q8_market_share",
-    "q3_shipping_priority",
-    "join_left_outer",
-    "join_right_outer",
-    "join_full_outer",
-    "join_semi",
-    "join_anti",
-    "join_theta_buckets",
-    "join_broadcast_dim",
-    "q4_order_priority",
-    "win_ranking",
-    "win_lag_lead",
-    "win_running",
-    "win_range_frame",
-    "win_first_last",
-    "multimodal_decode_features",
-    "embedding_random_projection",
-    "dedup_semantic_semdedup",
-    "pipeline_corpus_curation",
-    "sample_importance_weighted",
-    "graph_pagerank_bipartite",
-    "events_changepoint_cusum",
-]
-
-# Round-9 head kept below: everything here has an r9 driver row already.
-_SWEEP_PRIORITY_R9 = [
-    # -- new in round 9 --
-    "cluster_kmeans_converged",  # convergence-looped Lloyd, trace output
-    "stream_ann_ingest",  # streaming PQ index build, = batch bit-for-bit
-    "sim_rank_fusion_rrf",  # reciprocal-rank fusion of LSH + IVF branches
-    "stream_sample_reservoir",  # bottom-k-by-hash streaming uniform sample
-    "dq_embedding_drift",  # per-label centroid-movement monitor
-    # -- plan changed in round 9 after the latest driver row: first --
-    "sim_ann_ivfpq",  # recall 0.50 -> 0.72: trained PQ codebook + probe 6
-    "sim_ann_pq_lloyd",  # trainer: 8 collects -> ONE unpivoted (s,code) agg
-    "agg_histogram_equidepth",  # distributed_ntile counts join INNER -> LEFT
-    "orders_rfm_segments",  # same distributed_ntile guard change
-    # -- latest driver row is ROUND 4 (all 32: retire the cohort) --
-    "asof_join_nearest",
-    "agg_mode_deterministic",
-    "scan_hive_partitioned",
-    "events_retention_cohorts",
-    "join_null_safe",
-    "agg_bool_logic",
-    "scan_csv_dead_letter",
-    "pipeline_entity_resolution",
-    "multimodal_dedup_hash",
-    "agg_skew_kurtosis",
-    "events_dau_wau",
-    "geo_radius_join",
-    "geo_knn_within_radius",
-    "events_markov_transitions",
-    "agg_gini",
-    "win_running_distinct",
-    "orders_rfm_segmentation",
-    "agg_weighted_avg",
-    "events_type_cooccurrence",
-    "events_gap_fill_lerp",
-    "events_seasonality_dow_hour",
-    "events_anomaly_seasonal",
-    "basket_brand_affinity",
-    "nation_revenue_yoy",
-    "fn_regex_extract_all",
-    "filter_project",
-    "case_when",
-    "agg_corr_regression",
-    "events_funnel",
-    "scan_schema_evolution",
-    "sql_api_group_by_all",
-    "win_time_interval_frame",
-    # -- r05 cohort: the changed-in-round-5 tier fills the budget --
-    "dedup_containment",
-    "stream_anomaly_zscore",
-    "dedup_minhash_mllib",
-    "range_join_interval_overlap",
-    "dedup_url_canonical",
-    "embedding_quality_stats",
-    "dedup_chunk_global",
-    "win_moving_median",
-    "events_path_topk",
-    "embedding_random_projection",
-    "dedup_semantic_semdedup",
-    "pipeline_corpus_curation",
-    "sample_importance_weighted",
-    "graph_pagerank_bipartite",
-    "events_changepoint_cusum",
-    "multimodal_decode_features",
-    "q1_pricing_summary",  # flagship: oldest driver row among q-series
-    "wordcount",
-]
-
-# Round-8 head kept below: everything here has an r8 driver row already.
-_SWEEP_PRIORITY_R8 = [
-    # -- plan rewritten after its latest driver row (r5): re-verify first --
-    "q15_top_supplier",
-    # -- new in round 8 --
-    "agg_percentile_grid_sketch",  # deterministic mergeable quantile sketch
-    "stream_percentile_grid",  # its streaming twin: bounded state, WAL-exact
-    "sim_ann_pq_adc",  # product quantization + ADC scan, oracle-exact
-    "sim_ann_pq_lloyd",  # trained per-subspace PQ codebooks (Lloyd), full oracle
-    "sim_ann_ivfpq",  # IVF coarse prune x PQ compressed scan, composed
-    "events_attribution_touch",  # first/last-touch conversion credit
-    # -- latest driver row is ROUND 3 (28 queries: the full remaining cohort) --
-    "sessionize_native",
-    "pipeline_pretraining_mix",
-    "embedding_quantize_int8",
-    "fn_math",
-    "fn_null_semantics",
-    "fn_bitwise",
-    "fn_url",
-    "set_intersect_all",
-    "set_except_all",
-    "distinct_rows",
-    "drop_duplicates_subset",
-    "sample_stratified_exact",
-    "split_train_test",
-    "balance_classes",
-    "pack_sequences",
-    "asof_join",
-    "join_salted_skew",
-    "agg_grouping_sets",
-    "pivot_status_by_priority",
-    "q11_important_stock",
-    "q13_customer_distribution",
-    "q16_parts_supplier",
-    "q17_small_quantity",
-    "q20_dominant_supplier",
-    "q21_waiting_supplier",
-    "sql_api_recursive_cte",
-    "sql_api_lateral_topn",
-    "dedup_minhash_capped",
-    # -- latest driver row is ROUND 4 (21 of 47; the changed-in-r4 tier) --
-    "agg_percentile_approx",
-    "sim_knn_matmul",
-    "sim_ann_lsh",
-    "sim_ann_ivf_fixed",
-    "dedup_cluster_canonical",
-    "pipeline_training_prep",
-    "fuzzy_join_levenshtein",
-    "decontam_ngram_overlap",
-    "text_repetition",
-    "text_pii_redact",
-    "scan_text",
-    "dq_checks",
-    "events_anomaly_zscore",
-    "agg_histogram",
-    "fn_try_arith",
-    "scan_schema_evolution",
-    "sql_api_group_by_all",
-    "win_time_interval_frame",
-    "events_funnel",
-    "agg_corr_regression",
-]
-
-# The other 27 r04-latest queries: next tier, retire round 9.
-_SWEEP_PRIORITY_R8B = [
-    "asof_join_nearest",
-    "agg_mode_deterministic",
-    "scan_hive_partitioned",
-    "events_retention_cohorts",
-    "join_null_safe",
-    "agg_bool_logic",
-    "scan_csv_dead_letter",
-    "pipeline_entity_resolution",
-    "multimodal_dedup_hash",
-    "agg_skew_kurtosis",
-    "events_dau_wau",
-    "geo_radius_join",
-    "geo_knn_within_radius",
-    "events_markov_transitions",
-    "agg_gini",
-    "win_running_distinct",
-    "orders_rfm_segmentation",
-    "agg_weighted_avg",
-    "events_type_cooccurrence",
-    "events_gap_fill_lerp",
-    "events_seasonality_dow_hour",
-    "events_anomaly_seasonal",
-    "basket_brand_affinity",
-    "nation_revenue_yoy",
-    "fn_regex_extract_all",
-    "filter_project",
-    "case_when",
-]
-
-# Round-7 head kept below: everything here has an r7 driver row already.
-_SWEEP_PRIORITY_R7 = [
-    # -- NEVER driver-verified (added late round 6) --
-    "dedup_bloom_incremental",
-    "agg_median_mad",
-    "sim_range_search",
-    "graph_degree_distribution",
-    "dq_functional_dependency",
-    "orders_pareto_concentration",
-    "text_surprisal_lm",
-    "dedup_exact_substring_spans",
-    "stream_dedup_minhash",
-    "pipeline_dedup_funnel",
-    "text_boilerplate_chunks",
-    "text_bm25_topk",
-    "graph_triangle_count",
-    "stream_corpus_ingest",
-    "text_inverted_index",
-    "dedup_minhash_cap_loss",
-    "orders_market_basket_rules",
-    "dq_split_drift_chi2",
-    "dedup_cross_source_matrix",
-    "orders_rfm_segments",
-    # -- new in round 7 --
-    "cluster_kmeans_lloyd",  # oracle-exact quantized-Lloyd k-means (IVF fit)
-    "sim_ann_ivf_lloyd",  # trained-ANN pipeline composed, full oracle
-    "dq_benford_first_digit",  # Benford drift audit, libm-free
-    "win_ewma_finite",  # dyadic-weight EWMA over trailing frame
-    "events_forecast_seasonal_naive",  # week-over-week backtest, WMAPE
-    "agg_histogram_equidepth",  # exact decile buckets (profiler/CBO stat)
-    "events_twap_daily",  # time-weighted average over irregular samples
-    "agg_distinct_kmv",  # deterministic mergeable distinct sketch, oracle-exact
-    "stream_distinct_kmv",  # streaming KMV: bounded-state cardinality, WAL-free
-    # -- latest driver row is ROUND 3: streaming family first --
-    "stream_tumbling_window",
-    "stream_sliding_window",
-    "stream_session_window",
-    "stream_dedup",
-    "stream_filter_route",
-    "stream_stateful_user_totals",
-    "stream_stateful_user_totals_tws",
-    "stream_static_enrich",
-    "stream_kafka_topic_agg",
-    "stream_longpoll_agg",
-    "stream_stream_join",
-    "stream_topk_heavy_hitters",
-    "stream_scd2_current",
-    # -- r03: scans --
-    "scan_csv",
-    "scan_json",
-    "scan_orc",
-    "scan_csv_corrupt",
-    # -- r03: TPC-H q-series + SQL API --
-    "q2_min_cost_supplier",
-    "q5_local_supplier",
-    "q9_profit",
-    "q10_returned_items",
-    "q11_important_stock",
-    "q13_customer_distribution",
-    "q16_parts_supplier",
-    "q17_small_quantity",
-    "q20_dominant_supplier",
-    "q21_waiting_supplier",
-    "sql_api_recursive_cte",
-    "sql_api_lateral_topn",
-    # -- r03: the bench-regression question mark --
-    "dedup_minhash_capped",
-]
-
-# The other 19 r03-latest queries: next tier, retire round 8.
-_SWEEP_PRIORITY_R7B = [
-    "sessionize_native",
-    "pipeline_pretraining_mix",
-    "embedding_quantize_int8",
-    "fn_math",
-    "fn_null_semantics",
-    "fn_bitwise",
-    "fn_url",
-    "set_intersect_all",
-    "set_except_all",
-    "distinct_rows",
-    "drop_duplicates_subset",
-    "sample_stratified_exact",
-    "split_train_test",
-    "balance_classes",
-    "pack_sequences",
-    "asof_join",
-    "join_salted_skew",
-    "agg_grouping_sets",
-    "pivot_status_by_priority",
-]
-
-# Round-5 ordering kept for the tier below: everything here has an
-# r3/r4/r5 driver row already.
-_SWEEP_PRIORITY_R5 = [
-    # -- changed in round 5: must get a fresh driver row --
-    "dedup_containment",       # r5: doc_sets persisted across the 3-way fan-out
-    "stream_anomaly_zscore",   # r5: rebased via UpsertParquetSink, no collect()
-    "dedup_minhash_mllib",     # r5: rows-only -> full oracle (inlined MLlib coeffs)
-    "range_join_interval_overlap",  # r5: pair join -> sweep line (99s -> 1.3s at sf1)
-    "dedup_url_canonical",     # new in r5: URL canonicalization dedup
-    "embedding_quality_stats", # new in r5: vector-column data-quality gate
-    "dedup_chunk_global",      # new in r5: C4-style span dedup (keep-first)
-    "win_moving_median",       # new in r5: exact trailing-frame moving median
-    "events_path_topk",        # new in r5: top 3-step behavioral paths
-    "embedding_random_projection",  # new in r5: seeded JL projection, plan-literal matrix
-    "dedup_semantic_semdedup",  # new in r5: SemDeDup cluster-then-prune semantic dedup
-    "pipeline_corpus_curation",  # new in r5: gates -> semantic dedup -> token accounting
-    "sample_importance_weighted",  # new in r5: md5-deterministic Bernoulli reweighting
-    "graph_pagerank_bipartite",  # new in r5: integer PageRank, unrolled-CTE oracle
-    "events_changepoint_cusum",  # new in r5: integer CUSUM rate-shift monitor
-    "multimodal_decode_features",  # r5: schema changed (in-band dead-letter decode_ok)
-    # -- latest driver row is ROUND 1 (three fixture regens old) --
-    "q1_pricing_summary",      # flagship; last full-green row r1 (r4 re-check was local)
-    "wordcount",
-    "agg_basic",
-    "agg_stats",
-    "agg_collect",
-    "agg_rollup",
-    "agg_cube",
-    "agg_percentile",
-    "agg_approx_distinct",
-    "agg_having",
-    "agg_salted_skew",
-    "join_left_outer",
-    "join_right_outer",
-    "join_full_outer",
-    "join_semi",
-    "join_anti",
-    "join_theta_buckets",
-    "join_broadcast_dim",
-    "q3_shipping_priority",
-    "q4_order_priority",
-    "q6_forecast_revenue",
-    "q8_market_share",
-    "q12_shipmode_buckets",
-    "q14_promo_share",
-    "q15_top_supplier",
-    "q18_large_orders",
-    "q19_disjunctive",
-    "q22_acctbal_subquery",
-    "sql_api_q7_volume",
-    "win_ranking",
-    "win_lag_lead",
-    "win_running",
-    "win_range_frame",
-    "win_first_last",
-    "win_distribution",
-    "order_limit",
-    "topk_per_group",
-    "set_union_all",
-    "set_union_distinct",
-    "set_intersect",
-    "set_except",
-    "unpivot_metrics",
-    "sample_fraction",
-    # -- round-2 cohort head (fills the ~50 budget; rest lands round 6) --
-    "dedup_minhash",
-    "dedup_exact",
-    "dedup_exact_keep_first",
-    "dedup_simhash",
-    "dedup_ngram_jaccard",
-    "dedup_embedding_cosine",
-    "sim_knn_cosine",
-    "sim_pairs_threshold",
-    "sim_ann_ivf",
-    "text_stats",
-    "text_token_count",
-    "text_lang_id",
-    "text_quality",
-    "text_fingerprint",
-    "text_commonness_score",
-    "text_tfidf_topterms",
-    "topk_heavy_hitters",
-    "hypertable_rollup",
-    "sessionize_events",
-    "scd2_intervals",
-    "range_join_interval_overlap",
-    "range_join_point_in_interval",
-    "zorder_clustering",
-    "profile_columns",
-    "pipeline_engagement_report",
-    "fn_string",
-    "fn_string_split",
-    "fn_datetime",
-    "fn_datetime_agg",
-    "fn_array",
-    "fn_array_ops",
-    "fn_map_explode",
-    "fn_json",
-    "fn_json_build",
-    "multimodal_metadata",
-    "multimodal_resize",
-    "multimodal_frame_sample",
-    "multimodal_decode_features",
-    "udf_pandas_normalize",
-    "udf_python_row_normalize",
-    "udf_grouped_minmax",
-    "udtf_char_histogram",
-]
-
-# Round-4 ordering kept below for reference of what has fresh rows; these
-# names now sort AFTER the stale cohorts above (everything here has an
-# r3/r4 driver row already).
-_SWEEP_PRIORITY_R4 = [
-    # -- changed in round 4: must get a fresh driver row --
-    "agg_percentile_approx",   # r3 ERR: array column crashed the checker
-    "sim_knn_matmul",          # oracle registered r3, never driver-swept
-    "sim_ann_lsh",             # oracle new in r4 (inlined hyperplanes)
-    "sim_ann_ivf_fixed",       # new in r4: oracle-exact IVF (fixed codebook)
-    "dedup_cluster_canonical", # pairs now from the capped minhash path
-    "pipeline_training_prep",  # oracle follows the capped cluster step
-    "fuzzy_join_levenshtein",  # shifted-tail PassJoin blocking
-    "decontam_ngram_overlap",  # new in r4: benchmark decontamination
-    "text_repetition",         # new in r4: Gopher-style repetition signals
-    "text_pii_redact",         # new in r4: PII scrubbing audit
-    "scan_text",               # new in r4: raw line-oriented text scan
-    "dq_checks",               # new in r4: declarative data-quality suite
-    "events_anomaly_zscore",   # new in r4: hourly volume anomaly report
-    "agg_histogram",           # new in r4: fixed-edge equi-width histogram
-    "fn_try_arith",            # new in r4: TRY (error-safe) expression surface
-    "dedup_containment",       # new in r4: directional sub-document containment
-    "scan_schema_evolution",   # new in r4: mergeSchema two-generation scan
-    "sql_api_group_by_all",    # new in r4: GROUP BY ALL SQL sugar
-    "stream_anomaly_zscore",   # new in r4: streaming twin of the anomaly monitor
-    "win_time_interval_frame", # new in r4: trailing time-interval range frame
-    "events_funnel",           # new in r4: ordered conversion funnel
-    "agg_corr_regression",     # new in r4: deterministic corr/regression
-    "asof_join_nearest",       # new in r4: nearest-direction as-of join
-    "agg_mode_deterministic",  # new in r4: mode with stated tiebreak
-    "scan_hive_partitioned",   # new in r4: partition-pruned hive layout scan
-    "events_retention_cohorts",# new in r4: cohort retention matrix
-    "join_null_safe",          # new in r4: null-safe (<=>) equality join
-    "agg_bool_logic",          # new in r4: bool_and/bool_or aggregate surface
-    "scan_csv_dead_letter",    # new in r4: PERMISSIVE dead-letter routing scan
-    "pipeline_entity_resolution",  # new in r4: fuzzy match -> closure -> canonical
-    "multimodal_dedup_hash",   # new in r4: binary-payload exact dedup (no decode)
-    "agg_skew_kurtosis",       # new in r4: exact higher moments (integer sums)
-    "events_dau_wau",          # new in r4: DAU + trailing-7d WAU (cover-explode)
-    "geo_radius_join",         # new in r4: grid-blocked spatial radius join
-    "geo_knn_within_radius",   # new in r4: per-point kNN, rank bounded in shuffle
-    "events_markov_transitions",  # new in r4: behavioral transition matrix
-    "agg_gini",                # new in r4: exact-decimal Gini coefficient
-    "win_running_distinct",    # new in r4: windowed distinct via first-flag sum
-    "orders_rfm_segmentation", # new in r4: RFM quintile scoring matrix
-    "agg_weighted_avg",        # new in r4: exact-decimal weighted mean
-    "events_type_cooccurrence",# new in r4: type-pair co-occurrence matrix
-    "events_gap_fill_lerp",    # new in r4: spine gap fill + linear interpolation
-    "events_seasonality_dow_hour",  # new in r4: weekly seasonality heatmap
-    "events_anomaly_seasonal", # new in r4: season-adjusted anomaly z-scores
-    "basket_brand_affinity",   # new in r4: co-purchase support + lift matrix
-    "nation_revenue_yoy",      # new in r4: year-over-year growth trend
-    "fn_regex_extract_all",    # new in r4: all-matches regex surface
-    # -- latest driver row is ROUND 1 (two fixture regens old) --
-    "q1_pricing_summary",
-    "filter_project",
-    "case_when",
-    "wordcount",
-    "agg_basic",
-    "agg_stats",
-    "agg_collect",
-    "agg_rollup",
-    "agg_cube",
-    "agg_percentile",
-    "agg_approx_distinct",
-    "agg_having",
-    "agg_salted_skew",
-    "join_left_outer",
-    "join_right_outer",
-    "join_full_outer",
-    "join_semi",
-    "join_anti",
-    "join_theta_buckets",
-    "join_broadcast_dim",
-    "q3_shipping_priority",
-    "q4_order_priority",
-    "q6_forecast_revenue",
-    "q8_market_share",
-    "q12_shipmode_buckets",
-    "q14_promo_share",
-    "q15_top_supplier",
-    "q18_large_orders",
-    "q19_disjunctive",
-    "q22_acctbal_subquery",
-    "sql_api_q7_volume",
-    "win_ranking",
-    "win_lag_lead",
-    "win_running",
-    "win_range_frame",
-    "win_first_last",
-    "win_distribution",
-    "order_limit",
-    "topk_per_group",
-    "set_union_all",
-    "set_union_distinct",
-    "set_intersect",
-    "set_except",
-    "unpivot_metrics",
-    "sample_fraction",
-]
-
-
-def _reorder_for_sweep() -> None:
-    # stale-first priority lists, then registration order for anything
-    # unlisted, then the permanent no-oracle pair DEAD LAST.  Duplicate
-    # names are fine: the first occurrence fixes a dict key's position.
-    back = [n for n in _SWEEP_BACK if n in QUERIES]
-    ordered = {
-        n: QUERIES[n]
-        for n in (
-            *_SWEEP_PRIORITY,
-            *_SWEEP_PRIORITY_R11,
-            *_SWEEP_PRIORITY_R10,
-            *_SWEEP_PRIORITY_R9,
-            *_SWEEP_PRIORITY_R8,
-            *_SWEEP_PRIORITY_R8B,
-            *_SWEEP_PRIORITY_R7,
-            *_SWEEP_PRIORITY_R7B,
-            *_SWEEP_PRIORITY_R5,
-            *_SWEEP_PRIORITY_R4,
-        )
-        if n in QUERIES and n not in back
-    }
-    for name, fn in QUERIES.items():
-        if name not in back:
-            ordered.setdefault(name, fn)
-    for name in back:
-        ordered[name] = QUERIES[name]
-    QUERIES.clear()
-    QUERIES.update(ordered)
-    oracles = {n: ORACLES[n] for n in ordered if n in ORACLES}
-    ORACLES.clear()
-    ORACLES.update(oracles)
-
-
-_reorder_for_sweep()
 
 __all__ = ["QUERIES", "ORACLES", "query", "get_queries", "get_oracles"]

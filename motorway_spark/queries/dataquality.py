@@ -134,10 +134,10 @@ def dq_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     per check with rows-examined, violation count, and a pass flag.
 
     Plan shape: per fact table, one conditional aggregate evaluates all
-    of its row-level predicates in a single scan (``count_if`` columns,
-    pure codegen); uniqueness runs as its own distinct-only aggregate so
-    the RewriteDistinctAggregates Expand never touches the conditional
-    buffers; FK checks are key-only LEFT ANTI joins (column-pruned to
+    of its row-level predicates in a single scan (``count_if`` columns)
+    and its PK-uniqueness count in the same aggregate (one
+    ``count_distinct`` next to the conditional counts: one scan per
+    table); FK checks are key-only LEFT ANTI joins (column-pruned to
     the join keys). Every intermediate is a one-row DataFrame, so the
     assembly cross-joins broadcast single rows and stacks them to the
     report layout — no data-sized join anywhere."""

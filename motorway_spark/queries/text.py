@@ -775,10 +775,14 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines, and per-doc summation is decimal-cast so accumulation
     order cannot matter.
 
-    Scale shape (100 TB): dl and tf are map-side-combinable hash
-    aggregates over the token stream; df and the corpus stats collapse
-    to a |query|-row and 1-row frame (broadcast); the only doc-keyed
-    shuffle joins tf to dl. Top-k is TakeOrderedAndProject (no global
+    Scale shape: dl and tf are map-side-combinable hash aggregates over
+    the token stream; df collapses to a |query|-row frame (broadcast);
+    the doc-keyed shuffle joins tf to dl. The corpus stats (total_dl,
+    n) are columns of an un-keyed window over dl, so every per-document
+    row passes through ONE partition: the plan's scale ceiling is one
+    task holding |documents| rows (fine at sf0.1-sf1, not at 100 TB;
+    a 1-row aggregate + broadcast join lifts it at the cost of a fourth
+    token explode). Top-k is TakeOrderedAndProject (no global
     sort); the final rank window runs over exactly {BM25_TOPK} rows.
     NULL text drops on both engines (explode/unnest of NULL emits no
     row); empty text contributes its [''] token to dl identically on

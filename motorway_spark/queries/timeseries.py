@@ -461,10 +461,11 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     conversion dashboard (the reference's vendor domain: Plecto builds
     KPI dashboards; motorway feeds them — README.md:8).
 
-    Shape: each stage is a user-keyed equality join (events ⋈ previous
-    stage's entry times) + min-aggregate — co-partitioned on user_id, so
-    a 100 TB event log funnels with 3 hash joins on the same key and no
-    all-history window sort. Timestamps compare as exact
+    Shape: one events scan, one exchange on user_id. The three stage
+    entry times are per-user window minima over that partitioning (no
+    joins); a per-user rollup and a 1-row count follow. The window sorts
+    each user's full event history, so a single very heavy user bounds
+    one task, not the plan. Timestamps compare as exact
     microsecond instants; counts are integers; the conversion fractions
     are single integer/integer IEEE divisions — bit-identical
     cross-engine."""

@@ -705,8 +705,11 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate of the SAME derived table (share-of-total > 0.1%).
 
     Spark-first: the per-part aggregate computes once; the grand total
-    is a 1-row broadcast cross join (Catalyst turns the scalar subquery
-    into exactly that). The threshold compares EXACT decimals scaled by
+    is a column of an un-keyed window over it. Scale ceiling: that
+    window sends every part-level row through ONE partition, so one
+    task holds |partkey| rows — it grows with the part count, unlike a
+    1-row aggregate + broadcast join (which re-runs the join +
+    aggregate per side). The threshold compares EXACT decimals scaled by
     an integer (val*1000 > tot) — no double rounding at the boundary,
     so both engines make identical keep/drop decisions.
 

@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import json
+import re
+from pathlib import Path
+
 import __spark_entry__ as entrymod
 
 
@@ -18,6 +22,28 @@ def test_queries_and_oracles_align(spark):
     assert qs, "no queries registered"
     # every oracle refers to a registered query
     assert set(oracles) <= set(qs)
+
+
+def test_sweep_order_is_derived_from_swept_rounds():
+    """queries() leads with the queries swept least recently (each
+    round's sweep budget takes a prefix) and ends with rows-only ones."""
+    from motorway_spark.queries import ORACLES, QUERIES
+
+    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
+    assert set(qs) == set(QUERIES) and len(qs) == len(QUERIES)
+    assert set(oracles) == set(ORACLES) and len(oracles) == len(ORACLES)
+
+    latest: dict[str, int] = {}
+    for path in Path(entrymod.__file__).resolve().parent.glob("CORRECTNESS_r*.json"):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name)
+        if m:
+            for name in json.loads(path.read_text()):
+                latest[name] = max(latest.get(name, 0), int(m.group(1)))
+
+    with_oracle = [n for n in qs if n in oracles]
+    rounds = [latest.get(n, 0) for n in with_oracle]
+    assert rounds == sorted(rounds)
+    assert list(qs)[len(with_oracle):] == [n for n in qs if n not in oracles]
 
 
 def test_package_builds_an_sdist_with_every_module(tmp_path):

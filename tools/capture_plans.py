@@ -57,6 +57,8 @@ def iter_event_lines(evdir: str):
 
 
 def per_query_jobs(evdir: str) -> dict[str, list[str]]:
+    """Query name -> one line per finished job whose description is
+    ``[name]``: wall seconds, task count, summed task seconds, call site."""
     jobs: dict[int, dict] = {}
     stage_tasks: dict[int, list[float]] = collections.defaultdict(list)
     for line in iter_event_lines(evdir):
@@ -91,9 +93,10 @@ def per_query_jobs(evdir: str) -> dict[str, list[str]]:
             continue
         wall = (j["t1"] - j["t0"]) / 1e3
         ntasks = sum(len(stage_tasks.get(s, [])) for s in j["stages"])
+        tasktime = sum(sum(stage_tasks.get(s, [])) for s in j["stages"])
         out[name].append(
             f"job {jid:3d}  wall {wall:7.2f}s  tasks {ntasks:4d}  "
-            f"{j['call'][:80]}"
+            f"tasktime {tasktime:7.2f}s  {j['call'][:80]}"
         )
     return out
 

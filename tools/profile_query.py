@@ -3,19 +3,24 @@
 Usage: python tools/profile_query.py SF_DIR NAME [NAME...]
 
 Runs each named query once with the noop sink inside a session that
-writes a Spark event log to a temp dir, then parses the log and prints
-one line per job: wall seconds, number of tasks, total task time, and
-the job's call site / description — the local[N] stand-in for the
-Spark UI's Jobs page (spark.ui is disabled in the engine sessions).
+writes a Spark event log to a temp dir, then reads the log with
+``tools/capture_plans.py``'s reader and prints one line per job: wall
+seconds, number of tasks, total task time, and the job's call site —
+the local[N] stand-in for the Spark UI's Jobs page (spark.ui is
+disabled in the engine sessions).
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 import tempfile
 import time
+from pathlib import Path
+
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+
+from tools.capture_plans import per_query_jobs  # noqa: E402
 
 
 def main() -> None:
@@ -39,68 +44,22 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()  # warmup
 
+    totals: dict[str, float] = {}
     for name in names:
-        spark.sparkContext.setJobDescription(f"== {name} ==")
+        spark.sparkContext.setJobDescription(f"[{name}]")
         t0 = time.perf_counter()
         df = QUERIES[name](spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        print(f"\n######## {name}: {dt:.3f}s total")
+        totals[name] = time.perf_counter() - t0
         spark.sparkContext.setJobDescription(None)
         spark.catalog.clearCache()
-
-    app_id = spark.sparkContext.applicationId
     spark.stop()
 
-    # parse the event log: job begin/end + stage task metrics
-    path = os.path.join(evdir, app_id)
-    if not os.path.exists(path):
-        cands = [p for p in os.listdir(evdir) if p.startswith(app_id)]
-        path = os.path.join(evdir, cands[0])
-    jobs: dict[int, dict] = {}
-    stage_tasks: dict[int, list[float]] = {}
-    stage_names: dict[int, str] = {}
-    with open(path) as fh:
-        for line in fh:
-            try:
-                ev = json.loads(line)
-            except json.JSONDecodeError:
-                continue
-            e = ev.get("Event")
-            if e == "SparkListenerJobStart":
-                jid = ev["Job ID"]
-                props = ev.get("Properties") or {}
-                jobs[jid] = {
-                    "t0": ev["Submission Time"],
-                    "desc": props.get("spark.job.description")
-                    or props.get("callSite.short", ""),
-                    "stages": [s["Stage ID"] for s in ev.get("Stage Infos", [])],
-                }
-            elif e == "SparkListenerJobEnd":
-                jid = ev["Job ID"]
-                if jid in jobs:
-                    jobs[jid]["t1"] = ev["Completion Time"]
-            elif e == "SparkListenerTaskEnd":
-                sid = ev["Stage ID"]
-                ti = ev.get("Task Info", {})
-                dur = (ti.get("Finish Time", 0) - ti.get("Launch Time", 0)) / 1e3
-                stage_tasks.setdefault(sid, []).append(dur)
-            elif e == "SparkListenerStageCompleted":
-                si = ev["Stage Info"]
-                stage_names[si["Stage ID"]] = si.get("Stage Name", "")
-
-    print("\n==== per-job breakdown ====")
-    for jid in sorted(jobs):
-        j = jobs[jid]
-        if "t1" not in j:
-            continue
-        wall = (j["t1"] - j["t0"]) / 1e3
-        ntasks = sum(len(stage_tasks.get(s, [])) for s in j["stages"])
-        tt = sum(sum(stage_tasks.get(s, [])) for s in j["stages"])
-        desc = (j["desc"] or "")[:100]
-        print(f"job {jid:3d}  wall {wall:7.2f}s  tasks {ntasks:4d}  "
-              f"tasktime {tt:7.2f}s  {desc}")
-    print(f"\nevent log: {path}")
+    tables = per_query_jobs(evdir)
+    for name in names:
+        print(f"\n######## {name}: {totals[name]:.3f}s total")
+        print("\n".join(tables.get(name, [])))
+    print(f"\nevent log: {evdir}")
 
 
 if __name__ == "__main__":
