@@ -74,17 +74,21 @@ Manifest metadata (the lakehouse rung): bucket -> {file names, row
 count, per-column min/max} plus the table schema — the same role as
 Delta's add-file stats. Stats come from parquet FOOTERS via pyarrow
 (driver-side, touched buckets only, no Spark job). Readers hand Spark
-explicit FILE paths — no directory listing anywhere: full reads,
-pruned merge reads, and delete_keys' schema lookup are all
-O(manifest) (the _mlog dir itself is listed, but it is bounded by the
-compaction window, never by table size). Externally mutilated buckets
-(listed files missing from disk) are detected per-read by stat()
-(HEAD-class) and healed by re-listing ONLY that bucket. Tables written
-before manifests existed (legacy ``_manifest.json`` +
-``_manifest.log`` JSONL, or no manifest at all) are adopted by a
-one-time full-listing bootstrap checkpoint; the legacy log is replayed
-read-only (a torn tail line is ignored — nothing ever appends to it
-again) and absorbed into the first checkpoint.
+explicit FILE paths and no data directory is listed. Building a full
+or pruned read stats each listed file on the driver (the heal check
+below, then Spark's own path check) and launches no Spark job before
+the scan — ``_scan`` keeps Spark's one-task-per-file listing job out
+of it — so its cost grows with the manifest's file count, not with
+what the data dirs hold. The _mlog dir itself is listed, but it is
+bounded by the compaction window, never by table size. Externally
+mutilated buckets (listed files missing from disk) are detected
+per-read by stat() (HEAD-class) and healed by re-listing ONLY that
+bucket. Tables written before manifests existed (legacy
+``_manifest.json`` + ``_manifest.log`` JSONL, or no manifest at all)
+are adopted by a one-time full-listing bootstrap checkpoint; the
+legacy log is replayed read-only (a torn tail line is ignored —
+nothing ever appends to it again) and absorbed into the first
+checkpoint.
 """
 
 from __future__ import annotations
@@ -143,6 +147,9 @@ class UpsertParquetSink:
     _LOG_COMPACT_EVERY = 256
     # merge redo attempts under bucket-overlap conflicts
     _MAX_COMMIT_RETRIES = 8
+    # serializes _scan's scoped raise of the session's discovery
+    # threshold, so concurrent reads always restore the original value
+    _scan_lock = threading.Lock()
 
     @classmethod
     def open(cls, spark: SparkSession, table_dir: str) -> "UpsertParquetSink":
@@ -801,20 +808,46 @@ class UpsertParquetSink:
         df = self.read()
         return 0 if df is None else df.count()
 
-    def _manifest_reader(self, m: dict):
-        """Parquet reader pinned to the MANIFEST's schema when recorded:
-        after an additive schema evolution the table legitimately holds
-        files with different column sets, and the explicit schema makes
-        older files read their missing columns as NULL (the lakehouse
-        read contract) instead of sampling one file's footer."""
-        reader = self.spark.read.option("basePath", self._data_dir())
-        if m.get("schema"):
-            from pyspark.sql.types import StructType
+    @staticmethod
+    def _manifest_schema(m: dict):
+        """The MANIFEST's recorded schema (None when absent): after an
+        additive schema evolution the table legitimately holds files
+        with different column sets, and pinning this schema makes older
+        files read their missing columns as NULL (the lakehouse read
+        contract) instead of sampling one file's footer."""
+        if not m.get("schema"):
+            return None
+        from pyspark.sql.types import StructType
 
-            reader = reader.schema(
-                StructType.fromJson(json.loads(m["schema"]))
-            )
-        return reader
+        return StructType.fromJson(json.loads(m["schema"]))
+
+    def _scan(self, paths: list[str], schema=None) -> DataFrame:
+        """Parquet scan of explicit manifest-listed files, ``basePath``
+        keeping the ``bucket`` partition column, pinned to ``schema``
+        when given. Spark resolves more than
+        ``parallelPartitionDiscovery.threshold`` paths with a listing
+        JOB, one task per file (~3.5 ms per file on 4 cores), to stat
+        files the manifest already names; the threshold is raised to
+        ``len(paths)`` for this one call so the driver stats them
+        instead (~0.13 ms per file). The raise is scoped, not set on
+        the session: the same threshold governs recursive directory
+        discovery for every other read of the session, which may be a
+        caller's own (a read another thread builds during the call
+        also lists on the driver)."""
+        reader = self.spark.read.option("basePath", self._data_dir())
+        if schema is not None:
+            reader = reader.schema(schema)
+        key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+        conf = self.spark.conf
+        if len(paths) <= int(conf.get(key)):
+            return reader.parquet(*paths)
+        with UpsertParquetSink._scan_lock:
+            prev = conf.get(key)
+            conf.set(key, str(len(paths)))
+            try:
+                return reader.parquet(*paths)
+            finally:
+                conf.set(key, prev)
 
     def read(self) -> DataFrame | None:
         # A delete that removes the last row empties the manifest but
@@ -828,7 +861,7 @@ class UpsertParquetSink:
             )
             if not paths:
                 return None
-            return self._manifest_reader(m).parquet(*paths).drop("bucket")
+            return self._scan(paths, self._manifest_schema(m)).drop("bucket")
         if not self._bucket_dirs_ids():
             return None
         return self.spark.read.parquet(self._data_dir()).drop("bucket")
@@ -932,7 +965,7 @@ class UpsertParquetSink:
                 f"vacuumed (first: {os.path.basename(missing[0])}) — "
                 "out of vacuum retention"
             )
-        return self._manifest_reader(m).parquet(*paths).drop("bucket")
+        return self._scan(paths, self._manifest_schema(m)).drop("bucket")
 
     # -- change data feed (CDC) -----------------------------------------
     # Ops that change rows; heal/compact/stats/rebucket rewrite FILES
@@ -1174,13 +1207,8 @@ class UpsertParquetSink:
         def _leg(paths: list[str]) -> DataFrame:
             # pinned to the range-end schema: older files read evolved
             # columns as NULL / widened types promoted, same contract
-            # as _manifest_reader
-            return (
-                self.spark.read.option("basePath", self._data_dir())
-                .schema(data_schema)
-                .parquet(*paths)
-                .select(*data_cols)
-            )
+            # as _manifest_schema
+            return self._scan(paths, data_schema).select(*data_cols)
 
         nonkeys = [c for c in data_cols if c not in keys]
         legs: list[DataFrame] = []
@@ -1308,17 +1336,19 @@ class UpsertParquetSink:
         self, m: dict, affected: list[int], *, heal: bool = True
     ) -> DataFrame | None:
         """Read ONLY the affected buckets of snapshot ``m``. The file
-        paths come straight from metadata — the driver LISTS nothing
-        (it stat()s the listed files and heals a bucket mutated
-        externally; pass ``heal=False`` when the caller already healed
-        and pinned its read snapshot). ``basePath`` preserves the
-        ``bucket`` partition column."""
+        paths come straight from metadata and no directory is listed:
+        the driver stats each listed file to heal a bucket mutated
+        externally (pass ``heal=False`` when the caller already healed
+        and pinned its read snapshot), Spark stats them again on the
+        driver when ``_scan`` builds the read, and no Spark job runs
+        before the scan.
+        ``basePath`` preserves the ``bucket`` partition column."""
         if heal:
             m = self._heal_if_stale(m, affected)
         paths = self._manifest_paths(m, affected)
         if not paths:
             return None
-        return self._manifest_reader(m).parquet(*paths)
+        return self._scan(paths, self._manifest_schema(m))
 
     # -- additive staging ---------------------------------------------------
     def _stage(
@@ -2177,7 +2207,7 @@ class UpsertParquetSink:
             # heterogeneous files, and an inferred read could drop an
             # evolved column's values from every rewritten bucket and
             # then commit the narrowed schema back into the manifest.
-            table = self._manifest_reader(m).parquet(*paths)
+            table = self._scan(paths, self._manifest_schema(m))
             try:
                 # ONE pruned pass yields the touched-bucket set AND the
                 # delete count (formerly three jobs: a distinct-bucket

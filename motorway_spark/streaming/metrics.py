@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import datetime
 import json
+import statistics
 from collections import defaultdict
 
 from pyspark.sql import DataFrame, SparkSession
@@ -39,6 +40,14 @@ def percentile_from_dict(freq: dict[float, int], p: float) -> float:
     return max(freq)  # pragma: no cover — float-edge fallback
 
 
+# stateOperators figures summed over a progress event's operators
+STATE_TOTALS = ("numRowsTotal", "memoryUsedBytes", "commitTimeMs")
+
+
+def _medians(samples: dict[str, list[int]]) -> dict[str, float]:
+    return {k: statistics.median(v) for k, v in samples.items()}
+
+
 def _empty_minute() -> dict:
     # reference histogram bucket shape (controller.py:56-59)
     return {"error_count": 0, "success_count": 0, "timeout_count": 0, "processed_count": 0}
@@ -52,6 +61,11 @@ class MetricsListener(StreamingQueryListener):
     95th-percentile batch duration (from a duration-frequency dict, not
     a raw list), and a 60-slot per-minute histogram; ``api_status``
     serves the ``/api/status/`` payload shape (webserver.py:66-73).
+    Beyond the reference, each progress row keeps every trigger phase
+    Spark reports (``durationMs``: latestOffset, getBatch,
+    queryPlanning, addBatch, walCommit, commitOffsets, ...) and the
+    state-store totals (``STATE_TOTALS`` summed over the query's
+    ``stateOperators``); ``status`` reports their per-query medians.
     """
 
     def __init__(self):
@@ -78,7 +92,11 @@ class MetricsListener(StreamingQueryListener):
         p = json.loads(event.progress.json)
         name = p.get("name") or p.get("id")
         rows = int(p.get("numInputRows") or 0)
-        duration_ms = int((p.get("durationMs") or {}).get("triggerExecution", 0))
+        phases = {k: int(v) for k, v in (p.get("durationMs") or {}).items()}
+        duration_ms = phases.get("triggerExecution", 0)
+        ops = p.get("stateOperators") or []
+        # a stateless query reports no operators, hence no state figures
+        store = {k: int(sum(op.get(k) or 0 for op in ops)) for k in STATE_TOTALS}
         self.progress.append(
             {
                 "query": name,
@@ -87,6 +105,8 @@ class MetricsListener(StreamingQueryListener):
                 "rows_per_sec": float(p.get("processedRowsPerSecond") or 0.0),
                 "batch_duration_ms": duration_ms,
                 "timestamp": p.get("timestamp"),
+                "phases_ms": phases,
+                "state_store": store if ops else {},
             }
         )
         totals = self.totals[name]
@@ -134,9 +154,19 @@ class MetricsListener(StreamingQueryListener):
         (controller.py:43-60): counters + avg + p95 + histogram, plus the
         webserver's derived ``state`` (webserver.py:113-120): available →
         busy when there is backlog, overloaded when the backlog exceeds
-        what the process got through in the trailing 3 minutes."""
+        what the process got through in the trailing 3 minutes — and
+        the per-batch medians of every trigger phase
+        (``median_phases_ms``) and state-store total
+        (``median_state_store``), each over the batches that reported it."""
         out = {}
         now_minute = datetime.datetime.now().minute
+        phase_samples = defaultdict(lambda: defaultdict(list))
+        store_samples = defaultdict(lambda: defaultdict(list))
+        for row in self.progress:
+            for k, v in row["phases_ms"].items():
+                phase_samples[row["query"]][k].append(v)
+            for k, v in row["state_store"].items():
+                store_samples[row["query"]][k].append(v)
         for name, t in self.totals.items():
             batches = t["batches"]
             state = "available"
@@ -163,6 +193,8 @@ class MetricsListener(StreamingQueryListener):
                 "frequency": dict(t["frequency"]),
                 "total_frequency": sum(t["frequency"].values()),
                 "histogram": {m: dict(b) for m, b in t["histogram"].items()},
+                "median_phases_ms": _medians(phase_samples[name]),
+                "median_state_store": _medians(store_samples[name]),
             }
         return out
 
@@ -240,7 +272,8 @@ class MetricsListener(StreamingQueryListener):
     def progress_df(self, spark: SparkSession) -> DataFrame:
         schema = (
             "query string, batch_id long, num_input_rows long,"
-            " rows_per_sec double, batch_duration_ms long, timestamp string"
+            " rows_per_sec double, batch_duration_ms long, timestamp string,"
+            " phases_ms map<string, long>, state_store map<string, long>"
         )
         return spark.createDataFrame(self.progress or [], schema=schema)
 

@@ -9,6 +9,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import sys
 
 import pytest
 from pyspark.sql import Row
@@ -366,3 +367,125 @@ def test_log_retention_zero_restores_immediate_cleanup(spark, tmp_path):
     assert len(ckpts) == 1 and ckpts[0][0] >= 5
     assert all(s > ckpts[0][0] for s, _ in _mlog_records(table, "delta"))
     assert sink.row_count() == 10
+
+
+_DISCOVERY = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+
+def _jobs_while(spark, group: str, build) -> tuple[list[int], object]:
+    """Run ``build()`` under job group ``group``; return the group's job
+    ids and what ``build`` returned. A marker job in a second group runs
+    afterwards: status events arrive in order, so once the marker has
+    ended, every job the build submitted is visible."""
+    import time
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        sc.setJobGroup(group, group)
+        out = build()
+        sc.setJobGroup(f"{group}:marker", "marker")
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    deadline = time.monotonic() + 30
+    while not any(
+        tracker.getJobInfo(i).status == "SUCCEEDED"
+        for i in tracker.getJobIdsForGroup(f"{group}:marker")
+    ):
+        assert time.monotonic() < deadline, f"marker job of {group} never ended"
+        time.sleep(0.05)
+    return sorted(tracker.getJobIdsForGroup(group)), out
+
+
+def test_manifest_reads_submit_no_listing_job(spark, tmp_path):
+    """A read over more files than Spark's parallel-discovery
+    threshold (32) builds without a Spark job: the driver stats the
+    manifest's files instead of a one-task-per-file listing job. The
+    session's threshold is unchanged afterwards, also when the read
+    raises and when several threads read at once."""
+    import threading
+
+    from pyspark.errors import AnalysisException
+
+    before = spark.conf.get(_DISCOVERY)
+    schema = "k bigint, ts bigint, v string"
+    table = str(tmp_path / "wide")
+    sink = UpsertParquetSink(spark, table, key_cols=["k"], num_buckets=16)
+    written = []
+    for b in range(3):  # disjoint rising keys: three append commits
+        rows = [(k, b, f"v{k}") for k in range(b * 64, (b + 1) * 64)]
+        written += rows
+        sink.upsert_batch(
+            spark.createDataFrame(rows, schema).coalesce(1), batch_id=b
+        )
+    m = sink._load_manifest()
+    all_buckets = sorted(int(k) for k in m["buckets"])
+    paths = sink._manifest_paths(m, all_buckets)
+    assert len(paths) >= 48 > int(before)
+    assert [r["op"] for r in sink.history()] == ["append"] * 3
+    seq = sink.history()[0]["seq"]
+
+    def rows_of(df):
+        return sorted(tuple(r) for r in df.select("k", "ts", "v").collect())
+
+    for name, build in [
+        ("read", sink.read),
+        ("read_version", lambda: sink.read_version(seq)),
+        ("read_buckets", lambda: sink._read_buckets(m, all_buckets)),
+        ("read_changes", lambda: sink.read_changes(-1, seq)),
+    ]:
+        jobs, df = _jobs_while(spark, f"manifest-scan-{name}", build)
+        assert jobs == [], f"{name} submitted jobs {jobs} while building"
+        assert rows_of(df) == sorted(written), name
+        assert spark.conf.get(_DISCOVERY) == before
+
+    # a merge rewriting every bucket: its changefeed "before" leg scans
+    # all 48+ replaced files
+    updated = [(k, 9, f"u{k}") for k, _, _ in written]
+    sink.upsert_batch(spark.createDataFrame(updated, schema), batch_id=3)
+    assert sink.history()[0]["op"] == "merge"
+    jobs, feed = _jobs_while(
+        spark, "manifest-scan-merge-changes", lambda: sink.read_changes(seq)
+    )
+    assert jobs == []
+    post = feed.filter(F.col("_change_type") == "update_postimage")
+    assert rows_of(post) == sorted(updated)
+    assert feed.filter(F.col("_change_type") == "update_preimage").count() == len(
+        written
+    )
+    assert spark.conf.get(_DISCOVERY) == before
+
+    # concurrent wide reads of the pre-merge version, more threads than
+    # cores and frequent thread switches: without the lock, a reader
+    # that saw another's raised value would restore it and leak it
+    results, errors = [], []
+
+    def reader():
+        try:
+            results.append(rows_of(sink.read_version(seq)))
+        except Exception as exc:  # noqa: BLE001 - reported below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=reader) for _ in range(6)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert results == [sorted(written)] * 6
+    assert spark.conf.get(_DISCOVERY) == before
+
+    # a wide read that raises still restores the threshold
+    old = sink._state_at(seq)
+    os.remove(sink._manifest_paths(old, all_buckets)[0])
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        sink._read_buckets(old, all_buckets, heal=False)
+    assert spark.conf.get(_DISCOVERY) == before

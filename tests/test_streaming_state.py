@@ -283,6 +283,81 @@ def test_status_server_serves_api_status(spark):
         server.stop()
 
 
+def test_metrics_listener_keeps_trigger_phases_and_state_store():
+    """Every ``durationMs`` phase and the summed ``stateOperators``
+    totals land in each progress row; status() and the /api/status/
+    payload carry their per-query medians."""
+    import json as _json
+
+    def progress_event(batch, phases, ops):
+        class _P:
+            json = _json.dumps(
+                {
+                    "name": "agg-1",
+                    "batchId": batch,
+                    "numInputRows": 10,
+                    "durationMs": phases,
+                    "stateOperators": ops,
+                }
+            )
+
+        class _E:
+            progress = _P()
+
+        return _E()
+
+    def op(rows, mem, commit):
+        return {
+            "operatorName": "stateStoreSave",
+            "numRowsTotal": rows,
+            "memoryUsedBytes": mem,
+            "commitTimeMs": commit,
+            "numRowsUpdated": 1,
+        }
+
+    listener = MetricsListener()
+    listener.onQueryProgress(progress_event(
+        0,
+        {"latestOffset": 2, "getBatch": 1, "queryPlanning": 30,
+         "addBatch": 100, "walCommit": 8, "commitOffsets": 6,
+         "triggerExecution": 150},
+        [op(10, 1000, 4), op(5, 500, 2)],
+    ))
+    listener.onQueryProgress(progress_event(
+        1,
+        {"latestOffset": 4, "getBatch": 3, "queryPlanning": 10,
+         "addBatch": 60, "walCommit": 6, "commitOffsets": 4,
+         "triggerExecution": 90},
+        [op(20, 3000, 8), op(5, 500, 2)],
+    ))
+    # an idle trigger of a stateless query: no phases beyond these two
+    listener.onQueryProgress(
+        progress_event(2, {"latestOffset": 9, "triggerExecution": 9}, [])
+    )
+
+    first = listener.progress[0]
+    assert first["batch_duration_ms"] == 150
+    assert first["phases_ms"]["addBatch"] == 100
+    assert first["phases_ms"]["walCommit"] == 8
+    assert first["state_store"] == {
+        "numRowsTotal": 15, "memoryUsedBytes": 1500, "commitTimeMs": 6,
+    }
+    assert listener.progress[2]["state_store"] == {}
+
+    stats = listener.status()["agg-1"]
+    assert stats["median_phases_ms"] == {
+        "latestOffset": 4, "getBatch": 2, "queryPlanning": 20,
+        "addBatch": 80, "walCommit": 7, "commitOffsets": 5,
+        "triggerExecution": 90,
+    }
+    assert stats["median_state_store"] == {
+        "numRowsTotal": 20, "memoryUsedBytes": 2500, "commitTimeMs": 8,
+    }
+    served = listener.api_status()["groups"]["agg"]["processes"]["agg-1"]
+    assert served["median_phases_ms"] == stats["median_phases_ms"]
+    assert served["median_state_store"] == stats["median_state_store"]
+
+
 def test_busy_and_overloaded_states():
     """webserver.py:113-120 state machine: waiting>0 → busy; waiting
     beyond the trailing-3-minute processed throughput → overloaded."""

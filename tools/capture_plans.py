@@ -27,6 +27,11 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
+# what query_jobs sums over a job's tasks, in its per-task tuple's order
+_TASK_SUMS = ("tasks", "task_wall_sec", "task_time_sec", "shuffle_write_bytes",
+              "shuffle_read_bytes", "input_bytes")
+
+
 def iter_event_lines(evdir: str):
     """Yield JSON lines from every event log under ``evdir`` (plain
     files or Spark-4 eventlog_v2 dirs with zstd-compressed parts)."""
@@ -56,11 +61,16 @@ def iter_event_lines(evdir: str):
                 continue
 
 
-def per_query_jobs(evdir: str) -> dict[str, list[str]]:
-    """Query name -> one line per finished job whose description is
-    ``[name]``: wall seconds, task count, summed task seconds, call site."""
+def query_jobs(evdir: str) -> dict[str, list[dict]]:
+    """Query name -> one record per finished job whose description is
+    ``[name]``, in job order: ``job``, ``call`` site, ``wall_sec``, and
+    over the job's tasks ``tasks``, ``task_wall_sec`` (launch to
+    finish), ``task_time_sec`` (executor run time), ``shuffle_write_bytes``,
+    ``shuffle_read_bytes`` and ``input_bytes``. A task counts for the
+    job that last started its stage, so a stage a later job skips (its
+    shuffle output reused) is not counted twice."""
     jobs: dict[int, dict] = {}
-    stage_tasks: dict[int, list[float]] = collections.defaultdict(list)
+    job_of_stage: dict[int, dict] = {}
     for line in iter_event_lines(evdir):
         try:
             ev = json.loads(line)
@@ -69,36 +79,51 @@ def per_query_jobs(evdir: str) -> dict[str, list[str]]:
         e = ev.get("Event")
         if e == "SparkListenerJobStart":
             props = ev.get("Properties") or {}
-            jobs[ev["Job ID"]] = {
-                "t0": ev["Submission Time"],
+            j = jobs[ev["Job ID"]] = {
+                "job": ev["Job ID"],
                 "desc": props.get("spark.job.description") or "",
                 "call": props.get("callSite.short", ""),
-                "stages": [s["Stage ID"] for s in ev.get("Stage Infos", [])],
+                "t0": ev["Submission Time"],
+                **dict.fromkeys(_TASK_SUMS, 0),
             }
-        elif e == "SparkListenerJobEnd":
-            if ev["Job ID"] in jobs:
-                jobs[ev["Job ID"]]["t1"] = ev["Completion Time"]
-        elif e == "SparkListenerTaskEnd":
-            ti = ev.get("Task Info", {})
-            stage_tasks[ev["Stage ID"]].append(
-                (ti.get("Finish Time", 0) - ti.get("Launch Time", 0)) / 1e3
+            for s in ev.get("Stage Infos", []):
+                job_of_stage[s["Stage ID"]] = j
+        elif e == "SparkListenerJobEnd" and ev["Job ID"] in jobs:
+            j = jobs[ev["Job ID"]]
+            j["wall_sec"] = (ev["Completion Time"] - j["t0"]) / 1e3
+        elif e == "SparkListenerTaskEnd" and ev.get("Stage ID") in job_of_stage:
+            ti, tm = ev.get("Task Info") or {}, ev.get("Task Metrics") or {}
+            sr = tm.get("Shuffle Read Metrics") or {}
+            sw = tm.get("Shuffle Write Metrics") or {}
+            task = (
+                1,
+                (ti.get("Finish Time", 0) - ti.get("Launch Time", 0)) / 1e3,
+                (tm.get("Executor Run Time") or 0) / 1e3,
+                sw.get("Shuffle Bytes Written") or 0,
+                (sr.get("Local Bytes Read") or 0) + (sr.get("Remote Bytes Read") or 0),
+                (tm.get("Input Metrics") or {}).get("Bytes Read") or 0,
             )
-    out: dict[str, list[str]] = collections.defaultdict(list)
-    for jid in sorted(jobs):
-        j = jobs[jid]
-        if "t1" not in j:
-            continue
-        name = j["desc"].strip("[]") if j["desc"].startswith("[") else None
-        if name is None:
-            continue
-        wall = (j["t1"] - j["t0"]) / 1e3
-        ntasks = sum(len(stage_tasks.get(s, [])) for s in j["stages"])
-        tasktime = sum(sum(stage_tasks.get(s, [])) for s in j["stages"])
-        out[name].append(
-            f"job {jid:3d}  wall {wall:7.2f}s  tasks {ntasks:4d}  "
-            f"tasktime {tasktime:7.2f}s  {j['call'][:80]}"
-        )
+            j = job_of_stage[ev["Stage ID"]]
+            for k, v in zip(_TASK_SUMS, task):
+                j[k] += v
+    out: dict[str, list[dict]] = collections.defaultdict(list)
+    for j in sorted(jobs.values(), key=lambda j: j["job"]):
+        if "wall_sec" in j and j["desc"].startswith("[") and j["desc"].endswith("]"):
+            out[j["desc"][1:-1]].append(j)
     return out
+
+
+def per_query_jobs(evdir: str) -> dict[str, list[str]]:
+    """Query name -> one line per finished job whose description is
+    ``[name]``: wall seconds, task count, summed task seconds, call site."""
+    return {
+        name: [
+            f"job {j['job']:3d}  wall {j['wall_sec']:7.2f}s  tasks {j['tasks']:4d}  "
+            f"tasktime {j['task_wall_sec']:7.2f}s  {j['call'][:80]}"
+            for j in jobs
+        ]
+        for name, jobs in query_jobs(evdir).items()
+    }
 
 
 def main() -> None:

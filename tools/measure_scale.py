@@ -14,16 +14,24 @@ scaling ratio and the lz4/zstd shuffle-codec delta.
 from __future__ import annotations
 
 import json
-import os
 import sys
 import tempfile
 import time
-from collections import defaultdict
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from tools.capture_plans import iter_event_lines  # noqa: E402
+from tools.capture_plans import query_jobs  # noqa: E402
+
+
+def scale_metrics(evdir: str) -> dict[str, dict[str, float]]:
+    """Query name -> executor task seconds and shuffle/input bytes,
+    summed over the query's ``[name]``-tagged jobs in the event log."""
+    keys = ("task_time_sec", "shuffle_write_bytes", "shuffle_read_bytes", "input_bytes")
+    return {
+        q: {k: round(sum(j[k] for j in jobs), 2) for k in keys}
+        for q, jobs in query_jobs(evdir).items()
+    }
 
 
 def main() -> int:
@@ -75,51 +83,12 @@ def main() -> int:
         print(f"# {name}: {wall[name]:.2f}s", file=sys.stderr)
     spark.stop()
 
-    # event-log attribution: job description -> jobId -> stageIds -> task
-    # shuffle metrics
-    job_of_stage: dict[int, str] = {}
-    agg = defaultdict(lambda: defaultdict(float))
-    for line in iter_event_lines(evdir):
-        try:
-            ev = json.loads(line)
-        except (TypeError, ValueError):
-            continue
-        if not isinstance(ev, dict):
-            continue
-        kind = ev.get("Event")
-        if kind == "SparkListenerJobStart":
-            desc = (ev.get("Properties") or {}).get(
-                "spark.job.description", ""
-            )
-            if desc.startswith("[") and desc.endswith("]"):
-                qname = desc[1:-1]
-                for sid in ev.get("Stage IDs", []):
-                    job_of_stage[sid] = qname
-        elif kind == "SparkListenerTaskEnd":
-            qname = job_of_stage.get(ev.get("Stage ID"))
-            if not qname:
-                continue
-            tm = ev.get("Task Metrics") or {}
-            a = agg[qname]
-            a["task_time_sec"] += (tm.get("Executor Run Time") or 0) / 1000.0
-            sw = tm.get("Shuffle Write Metrics") or {}
-            a["shuffle_write_bytes"] += sw.get("Shuffle Bytes Written") or 0
-            sr = tm.get("Shuffle Read Metrics") or {}
-            a["shuffle_read_bytes"] += (
-                sr.get("Local Bytes Read") or 0
-            ) + (sr.get("Remote Bytes Read") or 0)
-            inp = tm.get("Input Metrics") or {}
-            a["input_bytes"] += inp.get("Bytes Read") or 0
-
     out = {
         "sf_dir": sf_dir,
         "cpus": cpus,
         "codec": codec,
         "wall": wall,
-        "metrics": {
-            q: {k: round(v, 2) for k, v in m.items()}
-            for q, m in agg.items()
-        },
+        "metrics": scale_metrics(evdir),
     }
     with open(out_path, "w") as fh:
         json.dump(out, fh, indent=1)
