@@ -32,9 +32,8 @@ OPTIMISTIC CONCURRENCY rung:
   deletes a file any committed manifest entry lists; files not listed
   by the CURRENT manifest are invisible to current readers — a crashed
   writer's orphans, or the RETAINED prior versions a commit replaced
-  (kept for ``read_version()`` time travel; see
-  RETAIN_REPLACED_FILES) — and are reclaimed by ``vacuum()`` once
-  older than its retention window.
+  (kept for ``read_version()`` time travel and the changefeed) — and
+  are reclaimed by ``vacuum()`` once older than its retention window.
 - **The commit point is a numbered log record**, created atomically
   AND exclusively: ``_mlog/<seq>.delta.json`` is written to a temp
   name and ``os.link``ed into place — link fails loudly (EEXIST) if
@@ -59,12 +58,12 @@ OPTIMISTIC CONCURRENCY rung:
     3. otherwise (disjoint buckets) simply re-attempts the link at the
        next sequence number with the same record — its staged files
        and entries are still valid, no Spark work is repeated.
-  A conflict can also surface EARLIER than the link: a replaced file
-  the loser's staging job is still scanning may vanish mid-scan — in
-  eager-cleanup mode (RETAIN_REPLACED_FILES=False) from the winner's
-  post-commit delete, in the default retention mode only from a
-  concurrent ``vacuum`` aging it out — that FileNotFoundException is
-  caught and resolved identically to case 2.
+  A conflict can also surface EARLIER than the link: a file the
+  writer's snapshot lists may vanish before or during its scan (a
+  concurrent ``vacuum`` aging it out, or an external delete); that
+  error is resolved identically to case 2, and the fresh snapshot's
+  heal re-lists an externally mutilated bucket. ``_commit_loop`` is
+  the one place these redo rules live.
   Crash windows are benign by construction: a crash before the link
   leaves only invisible orphan files; a crash after the link leaves a
   fully committed batch (the batch id travels IN the record, so data
@@ -83,12 +82,12 @@ what the data dirs hold. The _mlog dir itself is listed, but it is
 bounded by the compaction window, never by table size. Externally
 mutilated buckets (listed files missing from disk) are detected
 per-read by stat() (HEAD-class) and healed by re-listing ONLY that
-bucket. Tables written before manifests existed (legacy
-``_manifest.json`` + ``_manifest.log`` JSONL, or no manifest at all)
-are adopted by a one-time full-listing bootstrap checkpoint; the
-legacy log is replayed read-only (a torn tail line is ignored —
-nothing ever appends to it again) and absorbed into the first
-checkpoint.
+bucket. A bare ``data/bucket=K/`` table with no manifest is adopted
+by a one-time full-listing bootstrap checkpoint. The pre-``_mlog``
+formats (``_manifest.json`` + ``_manifest.log``, ``_upsert_meta.json``)
+are no longer read: a directory holding one and no checkpoint is
+refused by name, because adopting it bare would also list the files
+its old manifest had excluded.
 """
 
 from __future__ import annotations
@@ -109,19 +108,24 @@ _BUCKET_DIR_RE = re.compile(r"^bucket=(\d+)$")
 _MLOG_RE = re.compile(r"^(\d{20})\.(delta|ckpt)\.json$")
 
 
+# Pre-_mlog on-disk formats: refused, never read (see _load_manifest).
+_LEGACY_FILES = ("_manifest.json", "_manifest.log", "_upsert_meta.json")
+
+
 def _is_vanished_file_error(exc: Exception) -> bool:
-    """True when a Spark job died because an input file disappeared
-    mid-scan — the signature of racing a concurrent winner's
-    post-commit cleanup of the files our snapshot listed. The caller
-    redoes against the fresh snapshot (whose heal path also covers the
-    other cause, genuine external deletion)."""
+    """True when building or running a scan failed because a file the
+    snapshot lists is gone — a concurrent ``vacuum`` aged it out, or
+    it was deleted externally. ``_commit_loop`` redoes against a
+    fresh snapshot, whose heal re-lists an externally mutilated
+    bucket."""
     s = str(exc)
     return "FileNotFoundException" in s or "does not exist" in s
 
 
 class _MlogGap(Exception):
-    """A sequence hole in the delta chain — the signature of racing a
-    compaction's cleanup; the caller re-scans for the newer checkpoint."""
+    """A sequence hole in the delta chain (``args[0]`` = the missing
+    seq) — the signature of racing a compaction's cleanup; the head
+    view re-scans for the newer checkpoint."""
 
 
 class CommitConflict(Exception):
@@ -188,9 +192,6 @@ class UpsertParquetSink:
         self.table_dir = table_dir.rstrip("/")
         self.key_cols = key_cols
         self.num_buckets = num_buckets
-        self._meta = f"{self.table_dir}/_upsert_meta.json"  # legacy, read-only
-        self._manifest_path = f"{self.table_dir}/_manifest.json"  # legacy base
-        self._manifest_log = f"{self.table_dir}/_manifest.log"  # legacy JSONL
         self._mlog_dir = f"{self.table_dir}/_mlog"
         # parsed-manifest cache, revalidated against the log listing
         self._m_cache: dict | None = None
@@ -213,17 +214,9 @@ class UpsertParquetSink:
         self._delta_touch: dict[int, frozenset[str]] = {}  # seq -> bucket keys
 
     # -- replay state ----------------------------------------------------
-    def _legacy_meta_batches(self) -> set[int]:
-        try:
-            with open(self._meta) as fh:
-                return set(json.load(fh)["batches"])
-        except (OSError, json.JSONDecodeError, KeyError):
-            return set()
-
     def _processed_batches(self) -> set[int]:
         m = self._load_manifest()
-        committed = set(m["batches"]) if m else set()
-        return committed | self._legacy_meta_batches()
+        return set(m["batches"]) if m else set()
 
     def _data_dir(self) -> str:
         return f"{self.table_dir}/data"
@@ -260,27 +253,19 @@ class UpsertParquetSink:
         return ckpts, deltas
 
     def _fs_stat(self):
-        """Cache validity token: legacy file stats + the newest
-        checkpoint's name + the names of log records ABOVE it. The dir
-        itself may hold up to ``LOG_RETENTION_SEC`` of RETAINED folded
-        records (they are pure namespace reservations — readers skip
-        seq <= ckpt, so their presence or later removal never changes
-        the view), plus writers' transient ``.tmp-*`` files; both are
+        """Cache validity token: the newest checkpoint's name + the
+        names of log records ABOVE it. The dir itself may hold up to
+        ``LOG_RETENTION_SEC`` of RETAINED folded records (they are pure
+        namespace reservations — readers skip seq <= ckpt, so their
+        presence or later removal never changes the view), plus
+        writers' transient ``.tmp-*`` files; both are
         EXCLUDED so the token stays bounded by the compaction window
         and a concurrent writer's tmp churn can't thrash the cache.
         Name-based (not a dir mtime): immune to mtime granularity."""
-
-        def st(p):
-            try:
-                s = os.stat(p)
-                return (s.st_mtime_ns, s.st_size)
-            except OSError:
-                return None
-
         try:
             names = os.listdir(self._mlog_dir)
         except OSError:
-            return (st(self._manifest_path), st(self._manifest_log), None, None)
+            return (None, None)
         top_ckpt = None
         top_seq = -1
         parsed = []
@@ -293,86 +278,46 @@ class UpsertParquetSink:
             if mt.group(2) == "ckpt" and seq > top_seq:
                 top_seq, top_ckpt = seq, n
         tail = tuple(sorted(n for seq, n in parsed if seq > top_seq))
-        return (st(self._manifest_path), st(self._manifest_log), top_ckpt, tail)
+        return (top_ckpt, tail)
 
-    def _load_legacy_base(self) -> dict | None:
-        """Pre-_mlog tables: `_manifest.json` base + `_manifest.log`
-        JSONL replay, READ-ONLY (nothing appends to these anymore, so
-        the historical torn-tail-append fusion hazard is gone; a torn
-        tail line left by an old crash is still skipped on replay)."""
-        try:
-            with open(self._manifest_path) as fh:
-                loaded = json.load(fh)
-            if loaded.get("version") != 1:
-                return None
-        except (OSError, json.JSONDecodeError):
-            return None
-        m = loaded
-        m.setdefault("batches", [])
-        try:
-            with open(self._manifest_log) as fh:
-                for line in fh:
-                    line = line.strip()
-                    if not line:
-                        continue
-                    try:
-                        rec = json.loads(line)
-                    except json.JSONDecodeError:
-                        break  # torn tail from an old crash mid-append
-                    if rec.get("schema"):
-                        m["schema"] = rec["schema"]
-                    for k, ent in rec.get("buckets", {}).items():
-                        if ent is None:
-                            m["buckets"].pop(k, None)
-                        else:
-                            m["buckets"][k] = ent
-        except OSError:
-            pass
+    @staticmethod
+    def _read_ckpt(path: str) -> dict:
+        with open(path) as fh:
+            m = json.load(fh)
+        m["batches"] = set(m.get("batches", []))
         return m
 
-    def _read_state(self):
-        """One coherent manifest view: newest checkpoint + ordered
-        delta replay. Raises _MlogGap when the chain has a hole (a
-        compaction's cleanup raced this read; the re-scan finds the
-        newer checkpoint that covers the removed records)."""
+    def _replay(self, as_of: int | None = None):
+        """The one log walk: the newest checkpoint at or below ``as_of``
+        (None = the head) plus the contiguous deltas above it, up to
+        ``as_of``, folded by ``_fold_record``. Returns ``(m, ckpt_seq,
+        head, touch)`` — ``touch`` maps each replayed seq to the bucket
+        keys it wrote — or ``(None, -1, -1, {})`` when no such
+        checkpoint exists. Raises _MlogGap at a hole in the chain."""
         ckpts, deltas = self._list_mlog()
+        base = [c for c in ckpts if as_of is None or c[0] <= as_of]
+        if not base:
+            if deltas and as_of is None:
+                # deltas only exist above the bootstrap checkpoint; its
+                # absence from this listing means cleanup raced us
+                raise _MlogGap(0)
+            return None, -1, -1, {}
+        ckpt_seq, path = base[-1]
+        m = self._read_ckpt(path)
         touch: dict[int, frozenset[str]] = {}
-        if ckpts:
-            ckpt_seq, path = ckpts[-1]
-            with open(path) as fh:
-                m = json.load(fh)
-        else:
-            m = self._load_legacy_base()
-            ckpt_seq = 0 if m is not None else -1
-            if m is None and deltas:
-                # deltas can only exist above a bootstrap checkpoint;
-                # its absence from this listing means cleanup raced us
-                raise _MlogGap(self._mlog_dir)
-        if m is None:
-            return None, -1, -1, touch
-        batches = set(m.get("batches", []))
         head = ckpt_seq
         for seq, path in deltas:
             if seq <= ckpt_seq:
                 continue  # folded into the checkpoint, not yet cleaned
+            if as_of is not None and seq > as_of:
+                break
             if seq != head + 1:
-                raise _MlogGap(f"missing seq {head + 1} in {self._mlog_dir}")
+                raise _MlogGap(head + 1)
             with open(path) as fh:
                 rec = json.load(fh)
-            if rec.get("schema"):
-                m["schema"] = rec["schema"]
-            if rec.get("num_buckets") is not None:
-                m["num_buckets"] = rec["num_buckets"]  # rebucket record
-            for k, ent in rec.get("buckets", {}).items():
-                if ent is None:
-                    m["buckets"].pop(k, None)
-                else:
-                    m["buckets"][k] = ent
-            if rec.get("batch_id") is not None:
-                batches.add(rec["batch_id"])
+            self._fold_record(m, rec)
             touch[seq] = frozenset(rec.get("buckets", {}))
             head = seq
-        m["batches"] = batches
         return m, ckpt_seq, head, touch
 
     def _load_manifest(self, force: bool = False) -> dict | None:
@@ -384,18 +329,27 @@ class UpsertParquetSink:
         cur = self._fs_stat()
         if not force and self._m_stat == cur:
             return self._m_cache
-        last: Exception | None = None
         for _ in range(3):
             try:
-                m, ckpt_seq, head, touch = self._read_state()
+                m, ckpt_seq, head, touch = self._replay()
                 break
             except _MlogGap as exc:  # raced a compaction; re-scan
-                last = exc
+                gap = exc.args[0]
                 cur = self._fs_stat()
         else:
             raise RuntimeError(
-                f"manifest log chain has a persistent gap: {last}"
+                f"manifest log chain has a persistent gap: missing seq "
+                f"{gap} in {self._mlog_dir}"
             )
+        if m is None:
+            for name in _LEGACY_FILES:
+                if os.path.exists(f"{self.table_dir}/{name}"):
+                    raise ValueError(
+                        f"{self.table_dir} holds {name} from a pre-_mlog "
+                        "sink and no _mlog checkpoint; that format is no "
+                        "longer read, and adopting the directory bare "
+                        "would also list files its old manifest excluded"
+                    )
         if m is not None and self.num_buckets is None:
             # opened via open(): adopt the table's own recorded count
             self.num_buckets = m.get("num_buckets")
@@ -438,18 +392,7 @@ class UpsertParquetSink:
             os.remove(tmp)
 
     def _apply_to_cache(self, seq: int, rec: dict) -> None:
-        m = self._m_cache
-        if rec.get("schema"):
-            m["schema"] = rec["schema"]
-        if rec.get("num_buckets") is not None:
-            m["num_buckets"] = rec["num_buckets"]
-        for k, ent in rec.get("buckets", {}).items():
-            if ent is None:
-                m["buckets"].pop(k, None)
-            else:
-                m["buckets"][k] = ent
-        if rec.get("batch_id") is not None:
-            m["batches"].add(rec["batch_id"])
+        self._fold_record(self._m_cache, rec)
         self._delta_touch[seq] = frozenset(rec.get("buckets", {}))
         self._head_seq = seq
         # Cache token = our snapshot's listing + the file we just
@@ -458,14 +401,9 @@ class UpsertParquetSink:
         # into the token while missing from the cached view, leaving
         # the cache stale forever. With the constructed token, their
         # file makes the token mismatch and forces a reload.
-        base_st, log_st, top_ckpt, tail = self._m_stat
+        top_ckpt, tail = self._m_stat
         ours = f"{seq:020d}.delta.json"
-        self._m_stat = (
-            base_st,
-            log_st,
-            top_ckpt,
-            tuple(sorted((tail or ()) + (ours,))),
-        )
+        self._m_stat = (top_ckpt, tuple(sorted((tail or ()) + (ours,))))
 
     def _try_commit(
         self,
@@ -535,7 +473,7 @@ class UpsertParquetSink:
     def _write_checkpoint(self) -> None:
         """Fold the current view into `_mlog/<head>.ckpt.json`; remove
         the records it covers only once they are older than
-        ``LOG_RETENTION_SEC`` (see above), plus any legacy base/log.
+        ``LOG_RETENTION_SEC`` (see above).
         Two writers checkpointing the same head race benignly: same
         seq = same folded state, either link wins, loser skips. A
         reader holding the OLD checkpoint that sees aged records
@@ -556,7 +494,7 @@ class UpsertParquetSink:
             "key_cols": m.get("key_cols") or self.key_cols or None,
             "schema": m.get("schema"),
             "buckets": m["buckets"],
-            "batches": sorted(m["batches"] | self._legacy_meta_batches()),
+            "batches": sorted(m["batches"]),
         }
         self._link_record(head, "ckpt", snap)
         horizon = time.time() - self.LOG_RETENTION_SEC
@@ -580,14 +518,8 @@ class UpsertParquetSink:
                     os.remove(path)
                 except OSError:
                     pass
-        for legacy in (self._manifest_path, self._manifest_log, self._meta):
-            try:
-                os.remove(legacy)
-            except OSError:
-                pass
         self._ckpt_seq = head
         self._delta_touch = {}
-        m["batches"] = set(snap["batches"])
         # a concurrent commit may land during our cleanup; poison the
         # token so the next access reparses (once per compaction)
         self._m_stat = ("ckpt-dirty",)
@@ -599,17 +531,6 @@ class UpsertParquetSink:
         untouched buckets). Raced bootstraps collapse: seq 0 is
         exclusively linked, the loser loads the winner's (equivalent)
         checkpoint."""
-        try:
-            with open(self._meta) as fh:
-                legacy_n = json.load(fh).get("num_buckets")
-        except (OSError, json.JSONDecodeError):
-            legacy_n = None
-        if legacy_n is not None and legacy_n != self.num_buckets:
-            raise ValueError(
-                f"sink constructed with num_buckets={self.num_buckets} over "
-                f"a legacy table written with num_buckets={legacy_n}; keys "
-                "would hash to the wrong buckets"
-            )
         buckets = {}
         schema = None
         ks = sorted(self._bucket_dirs_ids())
@@ -632,7 +553,7 @@ class UpsertParquetSink:
             "key_cols": self.key_cols or None,
             "schema": schema,
             "buckets": buckets,
-            "batches": sorted(self._legacy_meta_batches()),
+            "batches": [],
         }
         self._link_record(0, "ckpt", snap)
         m = self._load_manifest(force=True)
@@ -693,8 +614,8 @@ class UpsertParquetSink:
         row count and per-column min/max. Pure driver metadata work —
         pyarrow footer reads, no Spark job, touched buckets only.
         ``files`` pins the exact committed file set (the additive-write
-        path must NOT list the dir: it may hold replaced files pending
-        cleanup and crashed writers' orphans); None re-lists the dir
+        path must NOT list the dir: it may hold retained replaced files
+        and crashed writers' orphans); None re-lists the dir
         (bootstrap/heal)."""
         import pyarrow.parquet as pq
 
@@ -899,35 +820,18 @@ class UpsertParquetSink:
         retained checkpoint at-or-below it + contiguous delta replay up
         to it. Raises when the version has aged out of log retention or
         never existed."""
-        ckpts, deltas = self._list_mlog()
-        base_seq, base_path = -1, None
-        for cseq, cpath in ckpts:
-            if base_seq < cseq <= as_of:
-                base_seq, base_path = cseq, cpath
-        if base_path is not None:
-            with open(base_path) as fh:
-                m = json.load(fh)
-        else:
-            m = self._load_legacy_base()
-            base_seq = 0 if m is not None else -1
-            if m is None:
-                raise ValueError(
-                    f"version {as_of}: no checkpoint at or below it is "
-                    "retained — out of log retention"
-                )
-        head = base_seq
-        for seq, path in deltas:
-            if seq <= base_seq or seq > as_of:
-                continue
-            if seq != head + 1:
-                raise ValueError(
-                    f"version {as_of}: log record {head + 1} has aged "
-                    "out of retention"
-                )
-            with open(path) as fh:
-                rec = json.load(fh)
-            self._fold_record(m, rec)
-            head = seq
+        try:
+            m, _ckpt, head, _touch = self._replay(as_of)
+        except _MlogGap as exc:
+            raise ValueError(
+                f"version {as_of}: log record {exc.args[0]} has aged out "
+                "of log retention"
+            ) from None
+        if m is None:
+            raise ValueError(
+                f"version {as_of}: no checkpoint at or below it is "
+                "retained — out of log retention"
+            )
         if head != as_of:
             raise ValueError(
                 f"version {as_of} does not exist (newest retained "
@@ -977,7 +881,8 @@ class UpsertParquetSink:
     @staticmethod
     def _fold_record(m: dict, rec: dict) -> None:
         """Fold one delta record into manifest state ``m`` — the one
-        replay algebra, shared by time travel (``_state_at``) and the
+        replay algebra, shared by the head view (``_replay`` and the
+        post-commit ``_apply_to_cache``), time travel and the
         changefeed plan so they can never diverge."""
         if rec.get("schema"):
             m["schema"] = rec["schema"]
@@ -988,25 +893,8 @@ class UpsertParquetSink:
                 m["buckets"].pop(k, None)
             else:
                 m["buckets"][k] = ent
-
-    def _base_state(self, since_seq: int) -> dict:
-        """Manifest state AFTER commit ``since_seq`` (-1 = the empty
-        pre-history state). Falls back to an empty-base replay for
-        fresh tables that have no checkpoint yet."""
-        if since_seq < 0:
-            return {"buckets": {}, "schema": None}
-        try:
-            return self._state_at(since_seq)
-        except ValueError:
-            _ckpts, deltas = self._list_mlog()
-            avail = dict(deltas)
-            if avail and all(s in avail for s in range(since_seq + 1)):
-                m: dict = {"buckets": {}, "schema": None}
-                for s in range(since_seq + 1):
-                    with open(avail[s]) as fh:
-                        self._fold_record(m, json.load(fh))
-                return m
-            raise
+        if rec.get("batch_id") is not None:
+            m["batches"].add(rec["batch_id"])
 
     def changes_plan(
         self, since_seq: int = -1, to_seq: int | None = None
@@ -1040,10 +928,15 @@ class UpsertParquetSink:
         )
         if to_seq is None:
             to_seq = head
-        state = self._base_state(since_seq) if to_seq > since_seq else None
-        if state is None:
+        if to_seq <= since_seq:
             m = self._load_manifest()
             return [], (m or {}).get("schema")
+        # the state AFTER commit since_seq; -1 = the empty pre-history
+        state = (
+            self._state_at(since_seq)
+            if since_seq >= 0
+            else {"buckets": {}, "schema": None, "batches": set()}
+        )
         ckpt_avail = dict(_ckpts)
         items: list[dict] = []
         for seq in range(since_seq + 1, to_seq + 1):
@@ -1069,10 +962,9 @@ class UpsertParquetSink:
                         "aged out of log retention — restart the "
                         "changefeed from a current snapshot"
                     )
-                with open(cpath) as fh:
-                    ck = json.load(fh)
+                state = self._read_ckpt(cpath)
                 boot: dict[int, tuple[list[str], list[str]]] = {}
-                for k, ent in ck.get("buckets", {}).items():
+                for k, ent in state["buckets"].items():
                     if ent and ent["files"]:
                         base = f"{self._data_dir()}/bucket={k}"
                         boot[int(k)] = (
@@ -1088,10 +980,6 @@ class UpsertParquetSink:
                             "buckets": boot,
                         }
                     )
-                state = {
-                    "buckets": dict(ck.get("buckets", {})),
-                    "schema": ck.get("schema"),
-                }
                 continue
             with open(path) as fh:
                 rec = json.load(fh)
@@ -1317,8 +1205,8 @@ class UpsertParquetSink:
         return not self._bucket_dirs_ids()
 
     def _bucket_dirs_ids(self) -> list[int]:
-        """Live bucket ids from a directory listing (bootstrap/legacy
-        fallback only). Tolerates leftover junk like ``bucket=3.old``
+        """Live bucket ids from a directory listing (bootstrap and the
+        manifest-less fallback only). Tolerates leftover junk like ``bucket=3.old``
         from pre-rewrite crash windows: only exact ``bucket=<int>``
         names are buckets."""
         try:
@@ -1367,8 +1255,8 @@ class UpsertParquetSink:
         bucket to zero (merge output ⊇ batch).
 
         Returns (entries, replaced, staged_paths): the new manifest
-        entries, the snapshot's file names they supersede (deleted only
-        after the commit wins), and the staged files' absolute paths
+        entries, the snapshot's file names they supersede (retained,
+        unlisted, until vacuum), and the staged files' absolute paths
         (deleted if the commit is abandoned)."""
         data_dir = self._data_dir()
         tmp = tempfile.mkdtemp(
@@ -1414,40 +1302,6 @@ class UpsertParquetSink:
             except OSError:
                 pass
 
-    # Replaced data files are RETAINED on disk after a commit (they are
-    # unlisted, hence invisible to every current reader) and reclaimed
-    # by vacuum() once older than its retention window. Retention is
-    # what gives the log TIME TRAVEL: read_version(seq) can re-resolve
-    # a historical manifest's file lists for as long as both the log
-    # records (LOG_RETENTION_SEC) and the files (VACUUM_RETENTION_SEC)
-    # survive — the Delta VACUUM-bounds-time-travel contract exactly.
-    # False restores the old eager delete-on-commit behavior (smallest
-    # possible footprint, no time travel, correct either way).
-    RETAIN_REPLACED_FILES = True
-
-    def _cleanup_replaced(
-        self, entries: dict, replaced: dict[str, list[str]]
-    ) -> None:
-        """Post-commit: the files our commit superseded become
-        unlisted — invisible by design — and are either retained for
-        time travel (default; vacuum reclaims them later) or deleted
-        eagerly when RETAIN_REPLACED_FILES is off. A crash here merely
-        leaves orphans for vacuum()."""
-        if self.RETAIN_REPLACED_FILES:
-            return
-        for k, files in replaced.items():
-            live = os.path.join(self._data_dir(), f"bucket={k}")
-            for f in files:
-                try:
-                    os.remove(os.path.join(live, f))
-                except OSError:
-                    pass
-            if entries.get(k) is None:
-                try:
-                    os.rmdir(live)
-                except OSError:
-                    pass  # orphans keep it alive; they are invisible
-
     def _commit_write(
         self,
         m: dict,
@@ -1474,19 +1328,9 @@ class UpsertParquetSink:
         not footer-derived), recorded as the entry's klo/khi — the
         stats that make the append proof sound for string keys."""
         schema_json = new_df.schema.json()
-        try:
-            entries, replaced, staged = self._stage(
-                m, new_df, affected, drop_missing=drop_missing
-            )
-        except Exception as exc:  # noqa: BLE001 - narrowed below
-            if _is_vanished_file_error(exc):
-                # a concurrent winner's cleanup deleted a file our
-                # snapshot listed while our staging job was scanning it
-                # — same resolution as losing the link race on an
-                # overlapping bucket: redo from the fresh snapshot
-                self._load_manifest(force=True)
-                return "conflict"
-            raise
+        entries, replaced, staged = self._stage(
+            m, new_df, affected, drop_missing=drop_missing
+        )
         if kexact:
             for k, ent in entries.items():
                 if ent is not None and kexact.get(k) is not None:
@@ -1510,11 +1354,42 @@ class UpsertParquetSink:
                 rec["schema"] = schema_json
         status = self._try_commit(rec, read_seq, set(entries), batch_id)
         if status == "ok":
-            self._cleanup_replaced(entries, replaced)
+            # the replaced files stay on disk, unlisted and invisible:
+            # read_version() and the changefeed re-resolve them until
+            # vacuum() ages them out (Delta's VACUUM-bounds-time-travel
+            # contract); vacuum(retention_sec=0) is the small footprint
             self._maybe_compact()
         else:
             self._delete_staged(staged)
         return status
+
+    def _commit_loop(self, what: str, attempt, *, force: bool = False):
+        """The one optimistic redo loop. ``attempt(m)`` runs against a
+        fresh snapshot ``m`` (None when the table has no manifest yet;
+        ``force`` bypasses the cache) and returns its result. It is
+        redone when it returns ``'conflict'`` (a winning commit
+        overlapped its buckets, or a compaction folded past its
+        snapshot; its staged files are already deleted) or when a file
+        its snapshot lists vanished (``_is_vanished_file_error``: the
+        view is reloaded, and the next attempt's heal re-lists an
+        externally mutilated bucket). Raises CommitConflict after
+        ``_MAX_COMMIT_RETRIES`` attempts."""
+        last: Exception | None = None
+        for _ in range(self._MAX_COMMIT_RETRIES):
+            m = self._load_manifest(force=force)
+            try:
+                out = attempt(m)
+            except Exception as exc:  # noqa: BLE001 - narrowed below
+                if not _is_vanished_file_error(exc):
+                    raise
+                last = exc
+                self._load_manifest(force=True)
+                continue
+            if out != "conflict":
+                return out
+        raise CommitConflict(
+            f"{what}: gave up after {self._MAX_COMMIT_RETRIES} redos"
+        ) from last
 
     # Safe widening chains for implicit type resolution: within a
     # chain the wider type represents every narrower value exactly, so
@@ -1704,7 +1579,7 @@ class UpsertParquetSink:
         # unpersist when done).
         batch = batch.persist()
         try:
-            return self._upsert_batch_inner(batch_df, batch, batch_id)
+            self._upsert_batch_inner(batch_df, batch, batch_id)
         finally:
             batch.unpersist()
 
@@ -1744,13 +1619,12 @@ class UpsertParquetSink:
                 for r in batch.select("bucket").distinct().collect()
             )
 
-        for _ in range(self._MAX_COMMIT_RETRIES):
-            m = self._load_manifest()
+        def attempt(m):
             if m is None:
                 m = self._bootstrap_manifest()
-            if batch_id in m["batches"] | self._legacy_meta_batches():
+            if batch_id in m["batches"]:
                 batch_df.foreach(lambda _row: None)
-                return
+                return "batch"
             # heal BEFORE pinning the read snapshot: a heal commits a
             # record of its own, which would otherwise look like a
             # conflicting writer and force a pointless redo
@@ -1842,15 +1716,11 @@ class UpsertParquetSink:
                     op="merge",
                     kexact=self._merged_kexact(m, branges),
                 )
-            if status in ("ok", "batch"):
-                return
-            # 'conflict': a winner touched our buckets — redo against
-            # the fresh snapshot (loop; the append proof re-evaluates
-            # against the winner's updated stats and may fall back)
-        raise CommitConflict(
-            f"upsert_batch(batch_id={batch_id}): gave up after "
-            f"{self._MAX_COMMIT_RETRIES} overlapping-commit redos"
-        )
+            # on 'conflict' the redo re-evaluates the append proof
+            # against the winner's updated stats and may fall back
+            return status
+
+        self._commit_loop(f"upsert_batch(batch_id={batch_id})", attempt)
 
     def _append_provably_disjoint(
         self, m: dict, branges: dict[int, tuple] | None, batch: DataFrame
@@ -2107,8 +1977,7 @@ class UpsertParquetSink:
             casted.unpersist()
 
     def _delete_keys_inner(self, keys: DataFrame, affected: list[int]) -> int:
-        for _ in range(self._MAX_COMMIT_RETRIES):
-            m = self._load_manifest()
+        def attempt(m):
             if m is None:
                 m = self._bootstrap_manifest()
             m = self._heal_if_stale(m, affected)
@@ -2123,30 +1992,22 @@ class UpsertParquetSink:
                 for c in self.key_cols
             ]
             remaining = t.join(k, cond, "left_anti")
-            try:
-                # one job for both counts: keys are deduped, so a left
-                # join preserves target cardinality and a matched row
-                # is exactly a to-be-deleted row (formerly two separate
-                # scans of the touched buckets)
-                marked = keys.withColumn("__kmatch", F.lit(1)).alias("k")
-                stat = (
-                    t.join(marked, cond, "left")
-                    .agg(
-                        F.count(F.lit(1)).alias("nb"),
-                        F.coalesce(
-                            F.sum(F.col("k.__kmatch")), F.lit(0)
-                        ).alias("nd"),
-                    )
-                    .collect()[0]
+            # one job for both counts: keys are deduped, so a left join
+            # preserves target cardinality and a matched row is exactly
+            # a to-be-deleted row (formerly two separate scans of the
+            # touched buckets)
+            marked = keys.withColumn("__kmatch", F.lit(1)).alias("k")
+            stat = (
+                t.join(marked, cond, "left")
+                .agg(
+                    F.count(F.lit(1)).alias("nb"),
+                    F.coalesce(F.sum(F.col("k.__kmatch")), F.lit(0)).alias(
+                        "nd"
+                    ),
                 )
-                n_before = stat["nb"]
-                n_after = n_before - stat["nd"]
-            except Exception as exc:  # noqa: BLE001 - narrowed below
-                if _is_vanished_file_error(exc):
-                    self._load_manifest(force=True)
-                    continue  # raced a winner's cleanup; redo
-                raise
-            if n_after == n_before:
+                .collect()[0]
+            )
+            if not stat["nd"]:
                 return 0
             status = self._commit_write(
                 m,
@@ -2158,11 +2019,9 @@ class UpsertParquetSink:
                 op="delete",
                 kexact=self._carried_kexact(m, affected),
             )
-            if status == "ok":
-                return n_before - n_after
-        raise CommitConflict(
-            f"delete_keys: gave up after {self._MAX_COMMIT_RETRIES} redos"
-        )
+            return stat["nd"] if status == "ok" else status
+
+        return self._commit_loop("delete_keys", attempt)
 
     @_locked
     def delete_where(self, condition, bounds: dict | None = None) -> int:
@@ -2185,8 +2044,8 @@ class UpsertParquetSink:
         if self._table_empty():
             return 0
         hit = F.coalesce(condition, F.lit(False))
-        for _ in range(self._MAX_COMMIT_RETRIES):
-            m = self._load_manifest()
+
+        def attempt(m):
             if m is None:
                 m = self._bootstrap_manifest()
             ks = sorted(int(k) for k in m["buckets"])
@@ -2208,28 +2067,21 @@ class UpsertParquetSink:
             # evolved column's values from every rewritten bucket and
             # then commit the narrowed schema back into the manifest.
             table = self._scan(paths, self._manifest_schema(m))
-            try:
-                # ONE pruned pass yields the touched-bucket set AND the
-                # delete count (formerly three jobs: a distinct-bucket
-                # collect plus two counts over the touched buckets)
-                stats = (
-                    table.groupBy("bucket")
-                    .agg(F.sum(hit.cast("long")).alias("nhit"))
-                    .collect()
-                )
-                affected = sorted(
-                    r["bucket"] for r in stats if r["nhit"]
-                )
-                if not affected:
-                    return 0
-                n_deleted = int(sum(r["nhit"] for r in stats if r["nhit"]))
-                target = table.filter(F.col("bucket").isin(affected))
-                remaining = target.filter(~hit)
-            except Exception as exc:  # noqa: BLE001 - narrowed below
-                if _is_vanished_file_error(exc):
-                    self._load_manifest(force=True)
-                    continue  # raced a winner's cleanup; redo
-                raise
+            # ONE pruned pass yields the touched-bucket set AND the
+            # delete count (formerly three jobs: a distinct-bucket
+            # collect plus two counts over the touched buckets)
+            stats = (
+                table.groupBy("bucket")
+                .agg(F.sum(hit.cast("long")).alias("nhit"))
+                .collect()
+            )
+            affected = sorted(r["bucket"] for r in stats if r["nhit"])
+            if not affected:
+                return 0
+            n_deleted = int(sum(r["nhit"] for r in stats if r["nhit"]))
+            remaining = table.filter(F.col("bucket").isin(affected)).filter(
+                ~hit
+            )
             status = self._commit_write(
                 m,
                 read_seq,
@@ -2240,11 +2092,9 @@ class UpsertParquetSink:
                 op="delete",
                 kexact=self._carried_kexact(m, affected),
             )
-            if status == "ok":
-                return n_deleted
-        raise CommitConflict(
-            f"delete_where: gave up after {self._MAX_COMMIT_RETRIES} redos"
-        )
+            return n_deleted if status == "ok" else status
+
+        return self._commit_loop("delete_where", attempt)
 
     @staticmethod
     def _bucket_skippable(m: dict, k: int, bounds: dict) -> bool:
@@ -2273,8 +2123,8 @@ class UpsertParquetSink:
 
     def vacuum(self, retention_sec: float | None = None) -> int:
         """Remove invisible garbage: data files no manifest entry
-        lists (crashed writers' orphans, replaced files whose cleanup
-        crashed) and leftover non-live dirs like ``bucket=3.old`` from
+        lists (crashed writers' orphans, the replaced files retained for
+        time travel) and leftover non-live dirs like ``bucket=3.old`` from
         pre-rewrite crash windows. Returns the number of files removed.
 
         Safe against committed state by construction — it deletes only
@@ -2364,9 +2214,8 @@ class UpsertParquetSink:
         half-compacted bucket."""
         if max_files_per_bucket < 1:
             raise ValueError("max_files_per_bucket must be >= 1")
-        rewritten = 0
-        for _ in range(self._MAX_COMMIT_RETRIES):
-            m = self._load_manifest()
+
+        def attempt(m):
             if m is None:
                 return 0
             affected = sorted(
@@ -2375,12 +2224,12 @@ class UpsertParquetSink:
                 if len(e["files"]) > max_files_per_bucket
             )
             if not affected:
-                return rewritten
+                return 0
             m = self._heal_if_stale(m, affected)
             read_seq = self._head_seq
             target = self._read_buckets(m, affected, heal=False)
             if target is None:
-                return rewritten
+                return 0
             # one output file per bucket: partition dirs are written by
             # a single task per bucket after this bucket-key shuffle
             compacted = target.repartition(len(affected), "bucket")
@@ -2394,16 +2243,13 @@ class UpsertParquetSink:
                 op="compact",
                 kexact=self._carried_kexact(m, affected),
             )
-            if status == "ok":
-                # one pass per call: compact what was fragmented at
-                # call time; fragmentation landing concurrently belongs
-                # to the next scheduled run (keeps the call bounded
-                # under sustained ingest)
-                return rewritten + len(affected)
-            # 'conflict': a writer rewrote one of those buckets — redo
-        raise CommitConflict(
-            f"compact: gave up after {self._MAX_COMMIT_RETRIES} redos"
-        )
+            # one pass per call: compact what was fragmented at call
+            # time; fragmentation landing concurrently belongs to the
+            # next scheduled run (keeps the call bounded under
+            # sustained ingest)
+            return len(affected) if status == "ok" else status
+
+        return self._commit_loop("compact", attempt)
 
     @_locked
     def recompute_key_stats(self) -> int:
@@ -2419,8 +2265,8 @@ class UpsertParquetSink:
         if len(self.key_cols) != 1:
             return 0
         kc = self.key_cols[0]
-        for _ in range(self._MAX_COMMIT_RETRIES):
-            m = self._load_manifest()
+
+        def attempt(m):
             if m is None:
                 return 0
             missing = sorted(
@@ -2433,17 +2279,11 @@ class UpsertParquetSink:
             df = self._read_buckets(m, missing, heal=False)
             if df is None:
                 return 0
-            try:
-                rows = (
-                    df.groupBy("bucket")
-                    .agg(F.min(kc).alias("lo"), F.max(kc).alias("hi"))
-                    .collect()
-                )
-            except Exception as exc:  # noqa: BLE001 - narrowed below
-                if _is_vanished_file_error(exc):
-                    self._load_manifest(force=True)
-                    continue  # raced a winner's cleanup; redo
-                raise
+            rows = (
+                df.groupBy("bucket")
+                .agg(F.min(kc).alias("lo"), F.max(kc).alias("hi"))
+                .collect()
+            )
             rec: dict = {"op": "stats", "batch_id": None, "buckets": {}}
             for r in rows:
                 ent = m["buckets"].get(str(r["bucket"]))
@@ -2455,18 +2295,14 @@ class UpsertParquetSink:
                 rec["buckets"][str(r["bucket"])] = new_ent
             if not rec["buckets"]:
                 return 0
+            # on 'conflict' a writer rewrote one of those buckets — its
+            # commit carries fresher entries; the redo covers what's left
             status = self._try_commit(
                 rec, read_seq, set(rec["buckets"]), None
             )
-            if status == "ok":
-                return len(rec["buckets"])
-            # conflict: a writer rewrote one of those buckets — its
-            # commit carries fresher entries; redo over what's left
-            self._load_manifest(force=True)
-        raise CommitConflict(
-            f"recompute_key_stats: gave up after "
-            f"{self._MAX_COMMIT_RETRIES} redos"
-        )
+            return len(rec["buckets"]) if status == "ok" else status
+
+        return self._commit_loop("recompute_key_stats", attempt)
 
     # rebucket_policy default: with ~1 KB rows this targets ~1 GB
     # buckets, the "bucket ≈ a few GB" production discipline from
@@ -2551,8 +2387,8 @@ class UpsertParquetSink:
           mid-migration instead of hashing keys to the wrong buckets;
         - the rewrite itself is one partitionBy(bucket) shuffle of the
           table — O(table), the unavoidable cost of resharding — with
-          files staged additively and old files deleted only after the
-          commit wins (crash windows leave retention-aged orphans for
+          files staged additively and the old files retained, unlisted,
+          until vacuum (crash windows leave retention-aged orphans for
           vacuum, never a half-migrated table).
 
         Post-migration the instance continues under the new count.
@@ -2564,93 +2400,80 @@ class UpsertParquetSink:
         if new_num_buckets == self.num_buckets:
             return
         old_n = self.num_buckets
+
+        def attempt(m):
+            if m is None:
+                m = self._bootstrap_manifest()
+            if m.get("num_buckets") == new_num_buckets:
+                return "ok"  # another migrator already landed this count
+            old_ids = sorted(int(k) for k in m["buckets"])
+            read_seq = self._head_seq
+            # The touched set must cover EVERY bucket id either count
+            # can produce (plus any stray healed ids), not just ids
+            # that currently hold an entry: when shrinking, a
+            # concurrent old-count writer creating a FRESH entry in an
+            # entry-less id in [new_n, old_n) must intersect us, or its
+            # rows survive the migration hashed with the dead count
+            # (silent key misplacement).
+            affected = sorted(
+                set(old_ids) | set(range(max(old_n, new_num_buckets)))
+            )
+            snap = self._read_buckets(m, old_ids)
+            extra = {"num_buckets": new_num_buckets}
+            if snap is None:
+                # Empty table: metadata-only migration — but the
+                # conflict net must be the same full-range touched set,
+                # NOT set(): with an empty touched set a concurrent bulk
+                # load that links first would make _try_commit silently
+                # retry at the new head and land the num_buckets record
+                # OVER data hashed with the old count.
+                rec = {
+                    "op": "rebucket",
+                    "batch_id": None,
+                    "buckets": {},
+                    "replaced": {},
+                    **extra,
+                }
+                touched = {str(i) for i in affected}
+                return self._try_commit(rec, read_seq, touched, None)
+            new_df = snap.drop("bucket").withColumn(
+                "bucket",
+                F.pmod(F.hash(*self.key_cols), F.lit(new_num_buckets)),
+            )
+            # Keys move buckets, so carried ranges are meaningless;
+            # recompute exact klo/khi per NEW bucket in one extra
+            # (num_buckets)-row aggregate — rebucket is already an
+            # O(table) rewrite, and losing exact stats here would knock
+            # every string-keyed table off the append fast path at the
+            # precise moment it was resized for growth.
+            kexact = None
+            if len(self.key_cols) == 1:
+                kc = self.key_cols[0]
+                rows = (
+                    new_df.groupBy("bucket")
+                    .agg(F.min(kc).alias("lo"), F.max(kc).alias("hi"))
+                    .collect()
+                )
+                kexact = {}
+                for r in rows:
+                    rng = self._exact_range(r["lo"], r["hi"])
+                    if rng is not None:
+                        kexact[str(r["bucket"])] = rng
+            return self._commit_write(
+                m,
+                read_seq,
+                new_df,
+                affected,
+                drop_missing=True,
+                batch_id=None,
+                op="rebucket",
+                rec_extra=extra,
+                kexact=kexact,
+            )
+
         self._rebucket_allowed = frozenset({old_n, new_num_buckets})
         try:
-            for _ in range(self._MAX_COMMIT_RETRIES):
-                m = self._load_manifest(force=True)
-                if m is None:
-                    m = self._bootstrap_manifest()
-                if m.get("num_buckets") == new_num_buckets:
-                    break  # another migrator already landed this count
-                old_ids = sorted(int(k) for k in m["buckets"])
-                read_seq = self._head_seq
-                # The touched set must cover EVERY bucket id either
-                # count can produce (plus any stray healed ids), not
-                # just ids that currently hold an entry: when
-                # shrinking, a concurrent old-count writer creating a
-                # FRESH entry in an entry-less id in [new_n, old_n)
-                # must intersect us, or its rows survive the migration
-                # hashed with the dead count (silent key misplacement).
-                affected = sorted(
-                    set(old_ids) | set(range(max(old_n, new_num_buckets)))
-                )
-                snap = self._read_buckets(m, old_ids)
-                extra = {"num_buckets": new_num_buckets}
-                if snap is None:
-                    # Empty table: metadata-only migration — but the
-                    # conflict net must be the same full-range touched
-                    # set, NOT set(): with an empty touched set a
-                    # concurrent bulk load that links first would make
-                    # _try_commit silently retry at the new head and
-                    # land the num_buckets record OVER data hashed
-                    # with the old count.
-                    rec = {
-                        "op": "rebucket",
-                        "batch_id": None,
-                        "buckets": {},
-                        "replaced": {},
-                        **extra,
-                    }
-                    touched = {str(i) for i in affected}
-                    if self._try_commit(rec, read_seq, touched, None) == "ok":
-                        break
-                    continue
-                new_df = snap.drop("bucket").withColumn(
-                    "bucket",
-                    F.pmod(F.hash(*self.key_cols), F.lit(new_num_buckets)),
-                )
-                # Keys move buckets, so carried ranges are meaningless;
-                # recompute exact klo/khi per NEW bucket in one extra
-                # (num_buckets)-row aggregate — rebucket is already an
-                # O(table) rewrite, and losing exact stats here would
-                # knock every string-keyed table off the append fast
-                # path at the precise moment it was resized for growth.
-                kexact = None
-                if len(self.key_cols) == 1:
-                    kc = self.key_cols[0]
-                    kexact = {}
-                    try:
-                        rows = (
-                            new_df.groupBy("bucket")
-                            .agg(F.min(kc).alias("lo"), F.max(kc).alias("hi"))
-                            .collect()
-                        )
-                    except Exception as exc:  # noqa: BLE001 - narrowed
-                        if _is_vanished_file_error(exc):
-                            self._load_manifest(force=True)
-                            continue  # raced a winner's cleanup; redo
-                        raise
-                    for r in rows:
-                        rng = self._exact_range(r["lo"], r["hi"])
-                        if rng is not None:
-                            kexact[str(r["bucket"])] = rng
-                status = self._commit_write(
-                    m,
-                    read_seq,
-                    new_df,
-                    affected,
-                    drop_missing=True,
-                    batch_id=None,
-                    op="rebucket",
-                    rec_extra=extra,
-                    kexact=kexact,
-                )
-                if status == "ok":
-                    break
-            else:
-                raise CommitConflict(
-                    f"rebucket: gave up after {self._MAX_COMMIT_RETRIES} redos"
-                )
+            self._commit_loop("rebucket", attempt, force=True)
             self.num_buckets = new_num_buckets
         finally:
             self._rebucket_allowed = frozenset()

@@ -175,10 +175,6 @@ def test_bootstrap_adoption_emits_initial_inserts(spark, tmp_path):
     table = sink.table_dir
     # strip ALL manifest state: the data dir is now a bare adopted table
     shutil.rmtree(f"{table}/_mlog")
-    for legacy in ("_upsert_meta.json", "_manifest.json", "_manifest.log"):
-        p = f"{table}/{legacy}"
-        if os.path.exists(p):
-            os.remove(p)
     sink2 = UpsertParquetSink(spark, table, key_cols=["k"], num_buckets=4)
     sink2.upsert_batch(
         spark.createDataFrame([Row(k=99, v="new")], "k bigint, v string"),

@@ -242,50 +242,31 @@ def test_manifest_commits_are_numbered_log_deltas(spark, tmp_path):
     assert sink.row_count() == 40
 
 
-def test_legacy_jsonl_manifest_replays_and_migrates(spark, tmp_path):
-    """Tables written by the pre-rewrite sink (`_manifest.json` base +
-    `_manifest.log` JSONL) still load: the legacy log is replayed
-    READ-ONLY — a torn tail line left by an old crash is skipped, and
-    since nothing ever appends to the file again, the historical
-    fused-line hazard (a new record gluing onto a torn tail and taking
-    every later record with it) is structurally gone. The next write
-    commits to the numbered log, and compaction absorbs and removes
-    the legacy files."""
+def test_pre_mlog_manifest_files_are_refused(spark, tmp_path):
+    """The pre-_mlog formats (`_manifest.json` + `_manifest.log`,
+    `_upsert_meta.json`) are no longer read. A directory holding one
+    and no checkpoint is refused by name, never adopted bare: a bare
+    adoption would also list files the old manifest had excluded."""
     sink, table = _mk(spark, tmp_path)
-    # transcribe the current state into the LEGACY on-disk format
-    m = _manifest(sink)
     shutil.rmtree(f"{table}/_mlog")
-    k_up = next(iter(m["buckets"]))
-    ent = dict(m["buckets"][k_up])
-    base = {
-        "version": 1,
-        "num_buckets": 8,
-        "schema": m["schema"],
-        "buckets": {k: e for k, e in m["buckets"].items() if k != k_up},
-    }
-    with open(f"{table}/_manifest.json", "w") as fh:
-        json.dump(base, fh)
-    with open(f"{table}/_manifest.log", "w") as fh:
-        fh.write(json.dumps({"buckets": {k_up: ent}}) + "\n")
-        fh.write('{"buckets": {"3": {"files": ["TORN')  # old crash tail
-    # cold load: base + complete log records, torn tail ignored
-    m2 = _manifest(sink)
-    assert sum(e["rows"] for e in m2["buckets"].values()) == 40
-    assert {r["k"] for r in sink.read().collect()} == set(range(40))
-    # next write goes to the numbered log; a forced compaction absorbs
-    # and removes the legacy files without losing the log's record
-    fresh = UpsertParquetSink(spark, table, key_cols=["k"], num_buckets=8)
-    fresh._LOG_COMPACT_EVERY = 1
-    fresh.upsert_batch(
-        spark.createDataFrame(
-            [Row(k=0, ts=999, v="mig")], "k bigint, ts bigint, v string"
-        ),
-        batch_id=50,
+    row = spark.createDataFrame(
+        [Row(k=0, ts=999, v="x")], "k bigint, ts bigint, v string"
     )
-    assert not os.path.exists(f"{table}/_manifest.log")
-    assert not os.path.exists(f"{table}/_manifest.json")
+    for name in ("_manifest.json", "_manifest.log", "_upsert_meta.json"):
+        with open(f"{table}/{name}", "w") as fh:
+            fh.write("{}\n")
+        fresh = UpsertParquetSink(spark, table, key_cols=["k"], num_buckets=8)
+        with pytest.raises(ValueError, match=name):
+            fresh.read()
+        with pytest.raises(ValueError, match=name):
+            fresh.upsert_batch(row, batch_id=50)
+        with pytest.raises(ValueError, match=name):
+            UpsertParquetSink.open(spark, table)
+        assert not os.path.exists(f"{table}/_mlog")  # nothing adopted
+        os.remove(f"{table}/{name}")
+    # with the file gone, the bare directory is adopted as before
+    fresh = UpsertParquetSink(spark, table, key_cols=["k"], num_buckets=8)
     assert fresh.row_count() == 40
-    assert {r["k"] for r in fresh.read().collect()} == set(range(40))
 
 
 def test_manifest_log_compacts_into_checkpoint(spark, tmp_path):

@@ -24,6 +24,7 @@ import threading
 
 import pytest
 from pyspark.sql import Row
+from pyspark.sql import functions as F
 
 from motorway_spark.sinks import UpsertParquetSink
 
@@ -48,6 +49,35 @@ class RacingSink(UpsertParquetSink):
             self._synced = True
             self._barrier.wait(timeout=180)
         return super()._try_commit(*args, **kwargs)
+
+
+class VanishingSink(UpsertParquetSink):
+    """Test double: the first scan after ``armed`` is set deletes the
+    first file it was handed before Spark resolves the paths (a
+    concurrent vacuum or an external delete) and records the keys that
+    file held. ``attempts`` counts the redo loop's attempts."""
+
+    def __init__(self, *args, **kwargs):
+        super().__init__(*args, **kwargs)
+        self.armed = False
+        self.attempts = 0
+        self.lost: set[int] = set()
+
+    def _commit_loop(self, what, attempt, **kwargs):
+        def counted(m):
+            self.attempts += 1
+            return attempt(m)
+
+        return super()._commit_loop(what, counted, **kwargs)
+
+    def _scan(self, paths, schema=None):
+        import pyarrow.parquet as pq
+
+        if self.armed:
+            self.armed = False
+            self.lost = set(pq.read_table(paths[0]).column("k").to_pylist())
+            os.remove(paths[0])
+        return super()._scan(paths, schema)
 
 
 def _row_df(spark, k, ts, v):
@@ -509,3 +539,36 @@ def test_shared_instance_concurrent_writes_are_serialized(spark, tmp_path):
     got = {r["k"]: r["v"] for r in viewer.read().collect()}
     assert all(got[1000 + j] == f"w{j}" for j in range(1, 7))
     assert viewer.row_count() == 16
+
+
+@pytest.mark.parametrize("op", ["delete_where", "merge"])
+def test_vanished_input_file_redoes_against_healed_snapshot(
+    spark, tmp_path, op
+):
+    """A listed file that vanishes under a writer's scan is a redo, not
+    an error: the second attempt heals the bucket (its surviving files
+    are re-listed) and commits the write on top of it."""
+    table = _mk_table(spark, tmp_path)
+    sink = VanishingSink(spark, table, key_cols=["k"], num_buckets=8)
+    sink.armed = True
+    if op == "delete_where":
+        n = sink.delete_where(F.col("k") < 5)
+        want = {k: f"v{k}" for k in range(5, 40)}
+        assert n == len(set(range(5)) - sink.lost)
+    else:
+        sink.upsert_batch(_row_df(spark, 1, 999, "upd"), batch_id=1)
+        want = {k: f"v{k}" for k in range(40)}
+        want[1] = "upd"
+    assert sink.attempts == 2
+    assert sink.lost
+    for k in sink.lost - {1}:
+        want.pop(k, None)
+    # the redo may take the append path: the healed bucket's re-listed
+    # key range can exclude k=1
+    assert [d["op"] for d in _deltas(table)] in (
+        (["append", "heal", "delete"],)
+        if op == "delete_where"
+        else (["append", "heal", "merge"], ["append", "heal", "append"])
+    )
+    got = {r["k"]: r["v"] for r in sink.read().collect()}
+    assert got == want

@@ -2,9 +2,9 @@
 vacuum (unlisted = invisible to current readers), so read_version(seq)
 re-resolves any historical manifest within the retention windows —
 the Delta VACUUM-bounds-time-travel contract. history() is the audit
-surface. Out-of-retention versions raise clearly; eager-cleanup mode
-(RETAIN_REPLACED_FILES=False) restores the old footprint and is
-correct, just travel-free."""
+surface. Out-of-retention versions raise clearly. Replay starts from
+the newest checkpoint at or below the requested version, including
+checkpoints above the bootstrap and across a rebucket record."""
 
 from __future__ import annotations
 
@@ -73,26 +73,73 @@ def test_nonexistent_and_vacuumed_versions_raise(spark, tmp_path):
     assert sink.row_count() == 10
 
 
-def test_eager_cleanup_mode_has_no_travel_but_stays_correct(
+def _snap(df):
+    """{key: row dict} of a read (None = empty table)."""
+    return {} if df is None else {r["k"]: r.asDict() for r in df.collect()}
+
+
+def test_replay_from_checkpoints_above_zero_and_across_rebucket(
     spark, tmp_path
 ):
-    table = str(tmp_path / "eager")
-    sink = UpsertParquetSink(spark, table, key_cols=["k"], num_buckets=4)
-    sink.RETAIN_REPLACED_FILES = False
+    table = str(tmp_path / "replay")
+    sink = UpsertParquetSink(spark, table, key_cols=["k"], num_buckets=8)
+    sink._LOG_COMPACT_EVERY = 2  # checkpoints land at seq 2 and 4
+    seen = {}
+
+    def capture():
+        seen[sink._head_seq] = (sink.read().columns, _snap(sink.read()))
+
     sink.upsert_batch(
         spark.createDataFrame(
             [Row(k=i, v=f"a{i}") for i in range(10)], "k bigint, v string"
         ),
         batch_id=0,
-    )
+    )  # seq 1: append
+    capture()
     sink.upsert_batch(
-        spark.createDataFrame([Row(k=2, v="upd")], "k bigint, v string"),
+        spark.createDataFrame(
+            [Row(k=2, v="b2", extra=7), Row(k=20, v="n20", extra=8)],
+            "k bigint, v string, extra bigint",
+        ),
         batch_id=1,
+    )  # seq 2: merge that adds a column
+    capture()
+    sink.delete_keys(spark.createDataFrame([(5,)], "k bigint"))  # seq 3
+    capture()
+    sink.rebucket(4)  # seq 4
+    capture()
+
+    h = sink.history()
+    assert [r["seq"] for r in h] == [4, 3, 2, 1]
+    assert [r["op"] for r in h] == ["rebucket", "delete", "merge", "append"]
+    assert [s for s, _ in sink._list_mlog()[0]] == [0, 2, 4]
+    for r in h:
+        v = sink.read_version(r["seq"])
+        assert (v.columns, _snap(v)) == seen[r["seq"]], r["seq"]
+    head = sink._state_at(4)
+    cur = sink._load_manifest()
+    for field in ("buckets", "schema", "num_buckets"):
+        assert head[field] == cur[field], field
+    assert cur["num_buckets"] == 4
+
+    # since seq 1 (below both newer checkpoints): the base comes from
+    # checkpoint 0 + delta 1, then deltas 2-4 replay across the rebucket
+    got = sorted(
+        (r["k"], r["v"], r["extra"], r["_change_type"], r["_commit_seq"])
+        for r in sink.read_changes(since_seq=1).collect()
     )
-    got = {r["k"]: r["v"] for r in sink.read().collect()}
-    assert got[2] == "upd" and len(got) == 10
-    with pytest.raises(ValueError, match="vacuumed"):
-        sink.read_version(1).collect()
+    assert got == [
+        (2, "a2", None, "update_preimage", 2),
+        (2, "b2", 7, "update_postimage", 2),
+        (5, "a5", None, "delete", 3),
+        (20, "n20", 8, "insert", 2),
+    ]
+    # since seq 2 (the base is checkpoint 2 itself)
+    got = sorted(
+        (r["k"], r["_change_type"], r["_commit_seq"])
+        for r in sink.read_changes(since_seq=2).collect()
+    )
+    assert got == [(5, "delete", 3)]
 
 
 def test_time_travel_across_schema_evolution(spark, tmp_path):

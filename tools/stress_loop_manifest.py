@@ -1,12 +1,12 @@
-import sys, threading, tempfile, time, traceback
-sys.path.insert(0, "/root/repo")
+import os, sys, threading, tempfile, time, traceback
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession, Row
 spark = (SparkSession.builder.master("local[32]")
          .config("spark.sql.shuffle.partitions", "8")
          .config("spark.ui.enabled", "false").getOrCreate())
 spark.sparkContext.setLogLevel("ERROR")
 from motorway_spark.sinks import UpsertParquetSink
-import json, os
+import json
 
 def _row_df(spark, k, ts, v):
     return spark.createDataFrame([Row(k=k, ts=ts, v=v)], "k bigint, ts bigint, v string")
