@@ -38,6 +38,7 @@ def count_words_into_db(spark, db_path: str, n_sentences: int = 40):
     the sink (read the table back with sqlite3)."""
     from motorway_spark.sinks.dbapi import DbApiUpsertSink
     from motorway_spark.sources import register_sources
+    from motorway_spark.streaming.runner import run_foreach_batch
 
     register_sources(spark)
     sink = DbApiUpsertSink(
@@ -53,15 +54,9 @@ def count_words_into_db(spark, db_path: str, n_sentences: int = 40):
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("count"))
     )
-    q = (
-        stream.writeStream.outputMode("update")
-        .trigger(availableNow=True)
-        .foreachBatch(sink.foreach_batch())
-        .start()
-    )
-    q.awaitTermination(120)
-    if q.isActive:
-        q.stop()
+    # raises on a drain timeout instead of leaving a partial table
+    with tempfile.TemporaryDirectory(prefix="wordcount_ckpt_") as ckpt:
+        run_foreach_batch(stream, sink.foreach_batch(), ckpt, output_mode="update")
     return sink
 
 

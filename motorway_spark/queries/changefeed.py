@@ -31,15 +31,17 @@ partition.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from motorway_spark.catalog import Catalog
 from motorway_spark.queries.helpers import dec, sql_dsum
 from motorway_spark.queries.registry import query
+from motorway_spark.streaming.runner import (
+    run_stream_to_memory,
+    scratch_dir,
+    start_and_drain,
+)
 
 _CUT = "TIMESTAMP '1999-01-01 00:00:00'"
 
@@ -92,18 +94,12 @@ FROM state2 s JOIN delk d ON s.o_custkey = d.o_custkey
 _OUT_COLS = ["o_custkey", "n_orders", "total_spend",
              "_change_type", "_commit_seq"]
 
-_LAST_DIRS: dict[str, str] = {}
-
 
 def _build_table(spark: SparkSession, sf_dir: str, tag: str):
-    """The three-commit scenario; returns the sink. The previous
-    invocation's table dir is removed (same lifetime pattern as
-    sql_facade_manifest_table)."""
+    """The three-commit scenario; returns the sink. Its table dir is
+    ``scratch_dir(tag)``: the previous invocation's is removed."""
     from motorway_spark.sinks import UpsertParquetSink
 
-    prev = _LAST_DIRS.pop(tag, None)
-    if prev is not None:
-        shutil.rmtree(prev, ignore_errors=True)
     orders = Catalog(spark, sf_dir).table("orders")
     cut = F.expr(_CUT)
     is_early = F.col("o_orderdate") < cut
@@ -141,8 +137,7 @@ def _build_table(spark: SparkSession, sf_dir: str, tag: str):
         F.col("__n_total").alias("n_orders"),
         F.round(F.col("__sd_total").cast("double"), 4).alias("total_spend"),
     )
-    table_dir = tempfile.mkdtemp(prefix=f"cdc_{tag}_")
-    _LAST_DIRS[tag] = table_dir
+    table_dir = scratch_dir(f"cdc_{tag}", prefix=f"cdc_{tag}_")
     sink = UpsertParquetSink(
         spark, table_dir, key_cols=["o_custkey"], num_buckets=16
     )
@@ -181,8 +176,6 @@ def stream_table_changefeed(spark: SparkSession, sf_dir: str) -> DataFrame:
     parity of the changefeed itself (VERDICT r11 top item: the
     engine's tables are now change SOURCES, so
     stream -> table -> downstream-stream composes)."""
-    from motorway_spark.streaming.runner import run_stream_to_memory
-
     sink = _build_table(spark, sf_dir, "stream")
     drained = run_stream_to_memory(sink.read_stream(), output_mode="append")
     return drained.select(*_OUT_COLS).localCheckpoint(eager=True)
@@ -256,14 +249,9 @@ def stream_changefeed_matview(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_changefeed.py drives the multi-batch restart path)."""
     from motorway_spark.sinks import UpsertParquetSink
     from motorway_spark.streaming.matview import group_aggregate_view
-    from motorway_spark.streaming.runner import start_and_drain
 
     base = _build_table(spark, sf_dir, "mvbase")  # three commits
-    prev = _LAST_DIRS.pop("mv", None)
-    if prev is not None:
-        shutil.rmtree(prev, ignore_errors=True)
-    mv_dir = tempfile.mkdtemp(prefix="cdc_mv_")
-    _LAST_DIRS["mv"] = mv_dir
+    mv_dir = scratch_dir("cdc_mv", prefix="cdc_mv_")
     mv = UpsertParquetSink(
         spark, mv_dir, key_cols=["n_orders"], num_buckets=4
     )

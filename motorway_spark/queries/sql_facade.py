@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from motorway_spark.queries.helpers import sql_davg, sql_dsum
 from motorway_spark.queries.registry import query
+from motorway_spark.streaming.runner import scratch_dir
 
 
 def _register(name: str, text: str, doc: str) -> None:
@@ -151,9 +152,6 @@ SELECT n_orders, COUNT(*) AS n_customers,
 FROM merged GROUP BY n_orders
 """
 
-_LAST_FACADE_TABLE_DIR: str | None = None
-
-
 @query("sql_facade_manifest_table", oracle=_MANIFEST_FACADE_ORACLE)
 def sql_facade_manifest_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write THROUGH the engine's sink, query BACK through its SQL
@@ -176,17 +174,10 @@ def sql_facade_manifest_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference: motorway's durable sink (contrib/sql_alchemy/
     intersections.py:57-98) has no read-back surface at all; this is
     the lakehouse loop closed."""
-    import shutil
-    import tempfile
-
     from motorway_spark.catalog import Catalog
     from motorway_spark.queries.helpers import dec
     from motorway_spark.sinks import UpsertParquetSink
     from motorway_spark.sqlapi import sql as facade_sql
-
-    global _LAST_FACADE_TABLE_DIR
-    if _LAST_FACADE_TABLE_DIR is not None:
-        shutil.rmtree(_LAST_FACADE_TABLE_DIR, ignore_errors=True)
 
     orders = Catalog(spark, sf_dir).table("orders")
     cut = F.expr(_CUT)
@@ -220,8 +211,7 @@ def sql_facade_manifest_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("__n_total").alias("n_orders"),
         F.round(F.col("__sd_total").cast("double"), 4).alias("total_spend"),
     )
-    table_dir = tempfile.mkdtemp(prefix="facade_cust_orders_")
-    _LAST_FACADE_TABLE_DIR = table_dir
+    table_dir = scratch_dir("sql_facade_manifest_table", prefix="facade_cust_orders_")
     sink = UpsertParquetSink(
         spark, table_dir, key_cols=["o_custkey"], num_buckets=16
     )
@@ -283,9 +273,6 @@ SELECT n_orders, COUNT(*) AS n_customers,
 FROM updated GROUP BY n_orders
 """
 
-_LAST_DML_TABLE_DIR: str | None = None
-
-
 @query("sql_facade_merge_dml", oracle=_MERGE_DML_ORACLE)
 def sql_facade_merge_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The write half of the façade as SQL STRINGS: after an API-seeded
@@ -307,17 +294,10 @@ def sql_facade_merge_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``table_columns`` (contrib/sql_alchemy/intersections.py:57-98);
     here the statement IS the interface, and the engine plans the
     keyed MERGE underneath (VERDICT r11 item 3)."""
-    import shutil
-    import tempfile
-
     from motorway_spark.catalog import Catalog
     from motorway_spark.queries.helpers import dsum
     from motorway_spark.sinks import UpsertParquetSink
     from motorway_spark.sqlapi import sql as facade_sql
-
-    global _LAST_DML_TABLE_DIR
-    if _LAST_DML_TABLE_DIR is not None:
-        shutil.rmtree(_LAST_DML_TABLE_DIR, ignore_errors=True)
 
     orders = Catalog(spark, sf_dir).table("orders")
     early = (
@@ -328,8 +308,7 @@ def sql_facade_merge_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
             dsum("o_totalprice", "total_spend"),
         )
     )
-    table_dir = tempfile.mkdtemp(prefix="dml_cust_orders_")
-    _LAST_DML_TABLE_DIR = table_dir
+    table_dir = scratch_dir("sql_facade_merge_dml", prefix="dml_cust_orders_")
     sink = UpsertParquetSink(
         spark, table_dir, key_cols=["o_custkey"], num_buckets=16
     )

@@ -30,7 +30,16 @@ from pyspark.sql import functions as F
 
 from motorway_spark.queries.registry import query
 from motorway_spark.queries.helpers import dec
-from motorway_spark.streaming.runner import run_stream_to_memory, stream_events
+from motorway_spark.streaming.runner import (
+    run_foreach_batch,
+    run_stream_to_memory,
+    run_stream_to_upsert,
+    scoped_conf,
+    scratch_dir,
+    stream_documents,
+    stream_embeddings,
+    stream_events,
+)
 
 
 @query(
@@ -317,12 +326,11 @@ def stream_stateful_user_totals_tws(spark: SparkSession, sf_dir: str) -> DataFra
         def close(self) -> None:
             pass
 
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
+    with scoped_conf(
+        spark,
         "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    ):
         counted = events.select("user_id", "value").groupBy("user_id").transformWithStateInPandas(
             UserTotals(),
             outputStructType="user_id long, n_events long, total_micro long",
@@ -330,11 +338,6 @@ def stream_stateful_user_totals_tws(spark: SparkSession, sf_dir: str) -> DataFra
             timeMode="None",
         )
         sink = run_stream_to_memory(counted, output_mode="update")
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     from pyspark.sql import Window
 
     w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
@@ -650,11 +653,6 @@ def stream_topk_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# the one landed SCD2 source table kept on disk (previous run's dir is
-# removed on the next invocation)
-_LAST_SCD2_TABLE_DIR: str | None = None
-
-
 def _advance_runs(cur, pdf):
     """Advance the (event_type, valid_from_us, n_events) current-run
     state over one event-time-sorted batch. The first in-batch run
@@ -745,18 +743,11 @@ def stream_scd2_current(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-batch splice is the CDC-correctness crux at 100 TB, where one
     user's events span many micro-batches.
     """
-    import shutil
-    import tempfile
-
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     from motorway_spark.catalog import Catalog
     from motorway_spark.sinks import UpsertParquetSink
-
-    global _LAST_SCD2_TABLE_DIR
-    if _LAST_SCD2_TABLE_DIR is not None:
-        shutil.rmtree(_LAST_SCD2_TABLE_DIR, ignore_errors=True)
 
     events = Catalog(spark, sf_dir).table("events").select(
         "user_id",
@@ -767,8 +758,7 @@ def stream_scd2_current(spark: SparkSession, sf_dir: str) -> DataFrame:
     lo, hi = events.agg(
         F.min("event_id"), F.max("event_id")
     ).collect()[0]
-    table_dir = tempfile.mkdtemp(prefix="scd2_events_")
-    _LAST_SCD2_TABLE_DIR = table_dir
+    table_dir = scratch_dir("stream_scd2_current", prefix="scd2_events_")
     sink = UpsertParquetSink(
         spark, table_dir, key_cols=["event_id"], num_buckets=16
     )
@@ -825,11 +815,6 @@ def stream_scd2_current(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# the one landed anomaly table kept on disk (previous run's dir is
-# removed on the next invocation)
-_LAST_ANOMALY_DIR: str | None = None
-
-
 def _anomaly_oracle() -> str:
     from motorway_spark.queries.dataquality import _Z_EXPR, _Z_THRESHOLD
 
@@ -868,18 +853,7 @@ def stream_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     anywhere: the z-pass self-joins the parquet table the way it would
     in production, and the sink's MERGE keys on (bucket_hour,
     event_type) so update-mode re-emissions converge to final counts."""
-    import shutil
-    import tempfile
-
     from motorway_spark.queries.dataquality import _Z_EXPR, _Z_THRESHOLD
-    from motorway_spark.streaming.runner import run_stream_to_upsert
-
-    # each run lands in a FRESH table dir (a reused dir's replay WAL
-    # would skip the new query's batch 0); the previous run's dir is
-    # removed here so a long session holds at most one (r5 review).
-    global _LAST_ANOMALY_DIR
-    if _LAST_ANOMALY_DIR is not None:
-        shutil.rmtree(_LAST_ANOMALY_DIR, ignore_errors=True)
 
     events = stream_events(spark, sf_dir)
     agg = (
@@ -892,11 +866,11 @@ def stream_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
             "c",
         )
     )
-    table_dir = tempfile.mkdtemp(prefix="anomaly_hourly_")
-    _LAST_ANOMALY_DIR = table_dir
+    # each run lands in a FRESH table dir: a reused dir's batch-id WAL
+    # would skip the new query's batch 0
     hourly = run_stream_to_upsert(
         agg,
-        table_dir=table_dir,
+        table_dir=scratch_dir("stream_anomaly_zscore", prefix="anomaly_hourly_"),
         key_cols=["bucket_hour", "event_type"],
         output_mode="update",
     )
@@ -949,9 +923,6 @@ def _stream_minhash_oracle() -> str:
            SUM(dup_band) > 0 AS is_near_dup
     FROM flag GROUP BY doc_id
     """
-
-
-_LAST_MHDEDUP_DIR: str | None = None
 
 
 def _minhash_process_batch(bdf: DataFrame, batch_id: int, flags_sink, reg_sink) -> None:
@@ -1069,17 +1040,9 @@ def stream_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Docs with no 4-gram shingle (NULL/empty/short text) never enter
     banding — same WHERE on both engines.
     """
-    import shutil
-    import tempfile
-
     from motorway_spark.sinks.upsert import UpsertParquetSink
-    from motorway_spark.streaming.runner import stream_documents
 
-    global _LAST_MHDEDUP_DIR
-    if _LAST_MHDEDUP_DIR is not None:
-        shutil.rmtree(_LAST_MHDEDUP_DIR, ignore_errors=True)
-    root = tempfile.mkdtemp(prefix="stream_mh_dedup_")
-    _LAST_MHDEDUP_DIR = root
+    root = scratch_dir("stream_dedup_minhash", prefix="stream_mh_dedup_")
     flags_sink = UpsertParquetSink(spark, f"{root}/flags", key_cols=["doc_id"])
     # "bucket" is the sink's reserved hash-bucket column — LSH key is bkt
     reg_sink = UpsertParquetSink(spark, f"{root}/registry", key_cols=["band", "bkt"])
@@ -1087,42 +1050,7 @@ def stream_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     def process_batch(bdf: DataFrame, batch_id: int) -> None:
         _minhash_process_batch(bdf, batch_id, flags_sink, reg_sink)
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        # same Python-worker connect-flake retry as run_stream_to_upsert;
-        # a restarted query renumbers batches from 0, so both tables
-        # (data + WAL) are wiped before the second attempt.
-        for attempt in (1, 2):
-            if attempt > 1:
-                shutil.rmtree(f"{root}/flags", ignore_errors=True)
-                shutil.rmtree(f"{root}/registry", ignore_errors=True)
-            q = (
-                stream_documents(spark, sf_dir)
-                .writeStream.outputMode("append")
-                .trigger(availableNow=True)
-                .foreachBatch(process_batch)
-                .start()
-            )
-            try:
-                # 600 s: sf10 (500k docs) drains in ~340 s on local[32];
-                # the default-120 s used by the events-stream queries
-                # timed the first sf10 measurement out
-                if not q.awaitTermination(600):
-                    raise TimeoutError("stream did not drain within 600s")
-                break
-            except Exception as exc:  # noqa: BLE001
-                if attempt == 1 and "Python worker" in str(exc):
-                    continue
-                raise
-            finally:
-                if q.isActive:
-                    q.stop()
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        else:
-            spark.conf.unset("spark.sql.shuffle.partitions")
+    run_foreach_batch(stream_documents(spark, sf_dir), process_batch, f"{root}/_ckpt")
     out = flags_sink.read()
     if out is None:
         raise RuntimeError(f"stream produced no batches into {root}/flags")
@@ -1133,7 +1061,6 @@ def stream_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Streaming corpus ingestion: quality gate -> exact-dup registry -> landing.
 # ---------------------------------------------------------------------------
-_LAST_INGEST_DIR: str | None = None
 
 
 def _ingest_oracle() -> str:
@@ -1261,53 +1188,16 @@ def stream_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     (should_take_message) upgraded to content fingerprints + quality
     verdicts.
     """
-    import shutil
-    import tempfile
-
     from motorway_spark.sinks.upsert import UpsertParquetSink
-    from motorway_spark.streaming.runner import stream_documents
 
-    global _LAST_INGEST_DIR
-    if _LAST_INGEST_DIR is not None:
-        shutil.rmtree(_LAST_INGEST_DIR, ignore_errors=True)
-    root = tempfile.mkdtemp(prefix="stream_ingest_")
-    _LAST_INGEST_DIR = root
+    root = scratch_dir("stream_corpus_ingest", prefix="stream_ingest_")
     flags_sink = UpsertParquetSink(spark, f"{root}/flags", key_cols=["doc_id"])
     reg_sink = UpsertParquetSink(spark, f"{root}/registry", key_cols=["fp"])
 
     def process_batch(bdf: DataFrame, batch_id: int) -> None:
         _ingest_process_batch(bdf, batch_id, flags_sink, reg_sink)
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        for attempt in (1, 2):
-            if attempt > 1:
-                shutil.rmtree(f"{root}/flags", ignore_errors=True)
-                shutil.rmtree(f"{root}/registry", ignore_errors=True)
-            q = (
-                stream_documents(spark, sf_dir)
-                .writeStream.outputMode("append")
-                .trigger(availableNow=True)
-                .foreachBatch(process_batch)
-                .start()
-            )
-            try:
-                if not q.awaitTermination(600):
-                    raise TimeoutError("stream did not drain within 600s")
-                break
-            except Exception as exc:  # noqa: BLE001
-                if attempt == 1 and "Python worker" in str(exc):
-                    continue
-                raise
-            finally:
-                if q.isActive:
-                    q.stop()
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        else:
-            spark.conf.unset("spark.sql.shuffle.partitions")
+    run_foreach_batch(stream_documents(spark, sf_dir), process_batch, f"{root}/_ckpt")
     out = flags_sink.read()
     if out is None:
         raise RuntimeError(f"stream produced no batches into {root}/flags")
@@ -1318,7 +1208,6 @@ def stream_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Streaming distinct-count: the KMV sketch maintained per micro-batch.
 # ---------------------------------------------------------------------------
-_LAST_KMV_DIR: str | None = None
 _KMV_STREAM_K = 256
 _KMV_STREAM_SPACE = 1152921504606846976.0  # 2^60
 
@@ -1392,15 +1281,9 @@ def stream_distinct_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     monitor it can't express with bounded memory."""
     import os
     import shutil
-    import tempfile
 
-    from motorway_spark.streaming.runner import stream_documents
 
-    global _LAST_KMV_DIR
-    if _LAST_KMV_DIR is not None:
-        shutil.rmtree(_LAST_KMV_DIR, ignore_errors=True)
-    root = tempfile.mkdtemp(prefix="stream_kmv_")
-    _LAST_KMV_DIR = root
+    root = scratch_dir("stream_distinct_kmv", prefix="stream_kmv_")
     sketch_dir = f"{root}/sketch"
 
     k = _KMV_STREAM_K
@@ -1438,35 +1321,7 @@ def stream_distinct_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.rename(tmp, sketch_dir)
         shutil.rmtree(old, ignore_errors=True)
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        # replay-idempotent by construction, so the flake retry needs
-        # no wipe: a restarted query re-merges the same values
-        for attempt in (1, 2):
-            q = (
-                stream_documents(spark, sf_dir)
-                .writeStream.outputMode("append")
-                .trigger(availableNow=True)
-                .foreachBatch(process_batch)
-                .start()
-            )
-            try:
-                if not q.awaitTermination(300):
-                    raise TimeoutError("stream did not drain within 300s")
-                break
-            except Exception as exc:  # noqa: BLE001
-                if attempt == 1 and "Python worker" in str(exc):
-                    continue
-                raise
-            finally:
-                if q.isActive:
-                    q.stop()
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        else:
-            spark.conf.unset("spark.sql.shuffle.partitions")
+    run_foreach_batch(stream_documents(spark, sf_dir), process_batch, f"{root}/_ckpt")
 
     _recover_kmv_sketch(sketch_dir)
     sketch = spark.read.parquet(sketch_dir)
@@ -1488,7 +1343,6 @@ def stream_distinct_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
 # stream_distinct_kmv: bounded sketch state forever, exactly-once via
 # the sink's batch WAL, oracle-exact against the batch grid arithmetic.
 # ---------------------------------------------------------------------------
-_LAST_PGRID_DIR: str | None = None
 _PGRID_W_CENTS = 64    # bucket width in value-cents: value error <= $0.32
 _PGRID_B = 1024        # grid covers [0, $655.36); tail clamps into the top
 
@@ -1551,17 +1405,9 @@ def stream_percentile_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference: motorway's controller tracks per-intersection latency
     histograms with fixed buckets (motorway/controller.py percentile
     stats) — this is that monitor, distributed and exactly-once."""
-    import shutil
-    import tempfile
-
     from motorway_spark.sinks.upsert import UpsertParquetSink
-    from motorway_spark.streaming.runner import stream_events
 
-    global _LAST_PGRID_DIR
-    if _LAST_PGRID_DIR is not None:
-        shutil.rmtree(_LAST_PGRID_DIR, ignore_errors=True)
-    root = tempfile.mkdtemp(prefix="stream_pgrid_")
-    _LAST_PGRID_DIR = root
+    root = scratch_dir("stream_percentile_grid", prefix="stream_pgrid_")
 
     w, b = _PGRID_W_CENTS, _PGRID_B
     sink = UpsertParquetSink(
@@ -1591,35 +1437,7 @@ def stream_percentile_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         sink.upsert_batch(bc, batch_id)
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        # the WAL makes a replayed batch a table no-op, so the flake
-        # retry needs no wipe
-        for attempt in (1, 2):
-            q = (
-                stream_events(spark, sf_dir)
-                .writeStream.outputMode("append")
-                .trigger(availableNow=True)
-                .foreachBatch(process_batch)
-                .start()
-            )
-            try:
-                if not q.awaitTermination(300):
-                    raise TimeoutError("stream did not drain within 300s")
-                break
-            except Exception as exc:  # noqa: BLE001
-                if attempt == 1 and "Python worker" in str(exc):
-                    continue
-                raise
-            finally:
-                if q.isActive:
-                    q.stop()
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        else:
-            spark.conf.unset("spark.sql.shuffle.partitions")
+    run_foreach_batch(stream_events(spark, sf_dir), process_batch, f"{root}/_ckpt")
 
     grid = sink.read()
     from pyspark.sql import Window
@@ -1662,7 +1480,6 @@ def stream_percentile_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
 # a manifest-backed code registry; the drained registry answers the
 # same ADC search as the batch operator, bit-for-bit.
 # ---------------------------------------------------------------------------
-_LAST_ANN_INGEST_DIR: str | None = None
 
 
 def _ann_ingest_oracle() -> str:
@@ -1706,9 +1523,6 @@ def stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     at-least-once delivery + dedup (SURVEY §2a R5); this is that
     contract applied to an ANN index, with the search result as the
     verification surface."""
-    import shutil
-    import tempfile
-
     from motorway_spark.catalog import Catalog
     from motorway_spark.queries.similarity import (
         _PQ_CODES_NARROW_SCHEMA,
@@ -1720,13 +1534,8 @@ def stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         N_QUERIES,
     )
     from motorway_spark.sinks.upsert import UpsertParquetSink
-    from motorway_spark.streaming.runner import stream_embeddings
 
-    global _LAST_ANN_INGEST_DIR
-    if _LAST_ANN_INGEST_DIR is not None:
-        shutil.rmtree(_LAST_ANN_INGEST_DIR, ignore_errors=True)
-    root = tempfile.mkdtemp(prefix="stream_ann_ingest_")
-    _LAST_ANN_INGEST_DIR = root
+    root = scratch_dir("stream_ann_ingest", prefix="stream_ann_ingest_")
 
     cbn = _pq_fixed_cbn(spark, sf_dir)
     sink = UpsertParquetSink(
@@ -1742,45 +1551,7 @@ def stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         sink.upsert_batch(codes, batch_id)
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        # The flake retry reuses a DURABLE checkpoint so batch ids stay
-        # consistent across attempts: with a fresh temp checkpoint,
-        # attempt 2's ids restart at 0 while the sink's batch-id WAL
-        # still holds attempt 1's committed ids, and FileStreamSource's
-        # mtime-ordered file->batch assignment is not guaranteed stable
-        # between attempts — a not-yet-ingested shard could land in a
-        # WAL-skipped id and silently drop from the index. Resuming the
-        # same checkpoint replays exactly the uncommitted tail with its
-        # original ids (a sink-committed-but-checkpoint-torn batch
-        # replays under the SAME id and the WAL no-ops it — the keyed
-        # MERGE of deterministic codes is row-idempotent anyway).
-        for attempt in (1, 2):
-            q = (
-                stream_embeddings(spark, sf_dir)
-                .writeStream.outputMode("append")
-                .option("checkpointLocation", f"{root}/ckpt")
-                .trigger(availableNow=True)
-                .foreachBatch(process_batch)
-                .start()
-            )
-            try:
-                if not q.awaitTermination(300):
-                    raise TimeoutError("stream did not drain within 300s")
-                break
-            except Exception as exc:  # noqa: BLE001
-                if attempt == 1 and "Python worker" in str(exc):
-                    continue
-                raise
-            finally:
-                if q.isActive:
-                    q.stop()
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        else:
-            spark.conf.unset("spark.sql.shuffle.partitions")
+    run_foreach_batch(stream_embeddings(spark, sf_dir), process_batch, f"{root}/_ckpt")
 
     codes = sink.read()
     corpus = _valid_vectors(Catalog(spark, sf_dir).embeddings).select(
@@ -1802,7 +1573,6 @@ def stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (set union is idempotent), and the drained sample equals the batch
 # bottom-k over the same corpus EXACTLY — that equality is the oracle.
 # ---------------------------------------------------------------------------
-_LAST_RESERVOIR_DIR: str | None = None
 _RESERVOIR_K = 64
 
 
@@ -1846,15 +1616,9 @@ def stream_sample_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os
     import shutil
-    import tempfile
 
-    from motorway_spark.streaming.runner import stream_documents
 
-    global _LAST_RESERVOIR_DIR
-    if _LAST_RESERVOIR_DIR is not None:
-        shutil.rmtree(_LAST_RESERVOIR_DIR, ignore_errors=True)
-    root = tempfile.mkdtemp(prefix="stream_reservoir_")
-    _LAST_RESERVOIR_DIR = root
+    root = scratch_dir("stream_sample_reservoir", prefix="stream_reservoir_")
     state_dir = f"{root}/sample"
 
     k = _RESERVOIR_K
@@ -1884,34 +1648,7 @@ def stream_sample_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.rename(tmp, state_dir)
         shutil.rmtree(old, ignore_errors=True)
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        # union-idempotent: the flake retry needs no wipe
-        for attempt in (1, 2):
-            q = (
-                stream_documents(spark, sf_dir)
-                .writeStream.outputMode("append")
-                .trigger(availableNow=True)
-                .foreachBatch(process_batch)
-                .start()
-            )
-            try:
-                if not q.awaitTermination(300):
-                    raise TimeoutError("stream did not drain within 300s")
-                break
-            except Exception as exc:  # noqa: BLE001
-                if attempt == 1 and "Python worker" in str(exc):
-                    continue
-                raise
-            finally:
-                if q.isActive:
-                    q.stop()
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        else:
-            spark.conf.unset("spark.sql.shuffle.partitions")
+    run_foreach_batch(stream_documents(spark, sf_dir), process_batch, f"{root}/_ckpt")
 
     _recover_kmv_sketch(state_dir)
     out = spark.read.parquet(state_dir).orderBy("u", "doc_id")

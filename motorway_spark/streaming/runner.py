@@ -8,15 +8,103 @@ and returns the materialized result. This is how the engine's streaming
 operators get the same DuckDB-oracle treatment as batch ones: the
 streaming plan executes for real (state store, incremental execution),
 the finite source drains, and the sink table is compared to batch SQL.
+
+Drain contract — every drain in the engine (``start_and_drain``,
+``run_stream_to_memory``, ``run_foreach_batch``, ``run_stream_to_upsert``)
+runs through one loop, ``_drain``:
+
+- it waits up to ``_DRAIN_TIMEOUT_S`` for the query to terminate and
+  raises ``TimeoutError`` when it has not (a timed-out drain would
+  otherwise hand back a silently partial sink); the ``process_all`` mode
+  waits with ``processAllAvailable()`` instead;
+- it retries exactly once when the error text contains "Python worker"
+  (Spark's hardcoded 10 s connect-back timeout for a freshly forked
+  worker, missed under heavy machine load), re-raises anything else, and
+  stops the query on failure;
+- the retry rule is set by the sink kind's query factory: a memory sink
+  restarts under a fresh query name (a memory table does not survive a
+  restart); a table sink (``foreachBatch``) resumes the call's own
+  checkpoint, so the failed batch replays under its original id.
+  ``start_and_drain`` callers pass their own factory and with it the
+  rule.
+
+``run_stream_to_memory`` and ``run_foreach_batch`` scope
+``spark.sql.shuffle.partitions`` to 8 for the run (``scoped_conf``):
+each stateful streaming query materializes one state-store instance per
+shuffle partition per trigger, so at oracle scale the default 32+
+partitions are pure fixed overhead; results are partition-count
+independent. ``start_and_drain`` keeps the session's width.
+
+``scratch_dir`` owns the temp dirs of the stream-backed queries: a call
+removes the dir the previous call for the same tag made.
 """
 
 from __future__ import annotations
 
+import shutil
+import tempfile
 import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
 from motorway_spark.catalog import normalize_events_ts
+
+#: Upper bound on one drain. It only turns a hang into an error, so it
+#: is sized for the slowest drain in use: sf10 stream_dedup_minhash
+#: (500k docs) takes ~340 s on local[32].
+_DRAIN_TIMEOUT_S = 600
+_SHUFFLE_PARTITIONS = "8"
+
+_SCRATCH_DIRS: dict[str, str] = {}
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, key: str, value: str):
+    """Set a session conf for the body, then restore its previous value
+    (or unset it if it had none)."""
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prev is not None:
+            spark.conf.set(key, prev)
+        else:
+            spark.conf.unset(key)
+
+
+def _drain(start_query, process_all: bool = False):
+    """The one drain loop (module docstring): start via the factory,
+    wait, retry once on the Python-worker connect flake. Returns the
+    drained query."""
+    for attempt in (1, 2):
+        query = start_query()
+        try:
+            if process_all:
+                query.processAllAvailable()
+            elif not query.awaitTermination(_DRAIN_TIMEOUT_S):
+                raise TimeoutError(
+                    f"stream did not drain within {_DRAIN_TIMEOUT_S}s"
+                )
+            return query
+        except Exception as exc:  # noqa: BLE001
+            query.stop()
+            if attempt == 1 and "Python worker" in str(exc):
+                continue
+            raise
+
+
+def scratch_dir(tag: str, prefix: str) -> str:
+    """A fresh temp dir for ``tag``. The dir the previous call for the
+    same tag made is removed first, so a long session holds at most one
+    per tag; a frame returned from it must be materialized
+    (``localCheckpoint(eager=True)``) to outlive the next call."""
+    prev = _SCRATCH_DIRS.pop(tag, None)
+    if prev is not None:
+        shutil.rmtree(prev, ignore_errors=True)
+    _SCRATCH_DIRS[tag] = path = tempfile.mkdtemp(prefix=prefix)
+    return path
 
 
 def _staging_root() -> str:
@@ -120,8 +208,6 @@ def stream_embeddings(
 
     from motorway_spark.catalog import sf_tag
 
-    import uuid
-
     src = f"{sf_dir.rstrip('/')}/embeddings.parquet"
     stage = f"{_staging_root()}/{sf_tag(sf_dir)}/embeddings_rsplit{n_files}"
     if not os.path.isdir(stage):
@@ -142,8 +228,6 @@ def stream_embeddings(
             os.rename(tmp, stage)
         except OSError:
             # lost the race to a concurrent stager: theirs is complete
-            import shutil
-
             shutil.rmtree(tmp, ignore_errors=True)
     schema = spark.read.parquet(src).schema
     return (
@@ -154,29 +238,19 @@ def stream_embeddings(
     )
 
 
-def start_and_drain(start_query, attempts: int = 2):
-    """Start a StreamingQuery via ``start_query()`` (a zero-arg factory
-    that must generate a FRESH sink/query name per call) and drain it
-    with ``processAllAvailable``; one retry on the hardcoded-10 s
-    Python-worker connect flake. Returns the drained, still-running
-    query (caller stops it)."""
-    for attempt in range(1, attempts + 1):
-        query = start_query()
-        try:
-            query.processAllAvailable()
-            return query
-        except Exception as exc:  # noqa: BLE001
-            query.stop()
-            if attempt < attempts and "Python worker" in str(exc):
-                continue
-            raise
+def start_and_drain(start_query):
+    """Start a StreamingQuery via ``start_query()`` and drain it with
+    ``processAllAvailable`` under the drain contract (module docstring).
+    The zero-arg factory sets the retry rule: a FRESH query name per
+    call for a memory sink, its own ``checkpointLocation`` for a table
+    sink. The session's shuffle width is left as it is. Returns the
+    drained, still-running query (caller stops it)."""
+    return _drain(start_query, process_all=True)
 
 
 def run_stream_to_memory(
     streaming_df: DataFrame,
     output_mode: str = "complete",
-    timeout_sec: int = 120,
-    shuffle_partitions: int = 8,
     drain: str = "available_now",
 ) -> DataFrame:
     """Execute a streaming DataFrame to a memory sink until the finite
@@ -191,57 +265,60 @@ def run_stream_to_memory(
     drains with ``processAllAvailable()`` so commits release the caps
     batch by batch.
 
-    Shuffle partitions are dialled down for the run (and restored after):
-    each stateful streaming query materializes one state-store instance
-    per shuffle partition per trigger, so at oracle scale (sf0.01) the
-    default 32+ partitions are pure fixed overhead. Results are
-    partition-count-independent. At production scale callers pass a
-    larger value sized to key cardinality."""
+    A memory table does not survive a restart, so each attempt writes
+    under a fresh query name (a partially-filled append sink is never
+    reused) and the name of the attempt that drained is returned."""
     spark = streaming_df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    try:
-        # One retry on the Python-worker connect flake: Spark's
-        # PROCESS_WAIT_TIMEOUT_MS is a hardcoded 10 s, and under heavy
-        # machine load a freshly forked planner worker can miss it.
-        # The query is deterministic over a finite source, so a clean
-        # restart is safe (fresh name + temp checkpoint, same result —
-        # a fresh name so a partially-filled append sink isn't reused).
-        for attempt in (1, 2):
-            name = f"mem_{uuid.uuid4().hex[:12]}"
-            writer = (
-                streaming_df.writeStream.format("memory")
-                .queryName(name)
-                .outputMode(output_mode)
-            )
-            if drain == "available_now":
-                writer = writer.trigger(availableNow=True)
-            query = writer.start()
-            try:
-                if drain == "available_now":
-                    # awaitTermination returns False on TIMEOUT without
-                    # raising — treating that as success would hand the
-                    # caller a silently PARTIAL sink table
-                    if not query.awaitTermination(timeout_sec):
-                        raise TimeoutError(
-                            f"stream did not drain within {timeout_sec}s"
-                        )
-                else:
-                    query.processAllAvailable()
-                break
-            except Exception as exc:  # noqa: BLE001
-                if attempt == 1 and "Python worker" in str(exc):
-                    continue
-                raise
-            finally:
-                if query.isActive:
-                    query.stop()
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        else:
-            spark.conf.unset("spark.sql.shuffle.partitions")
-    return spark.table(name)
+    names: list[str] = []
+
+    def start():
+        names.append(f"mem_{uuid.uuid4().hex[:12]}")
+        writer = (
+            streaming_df.writeStream.format("memory")
+            .queryName(names[-1])
+            .outputMode(output_mode)
+        )
+        if drain == "available_now":
+            writer = writer.trigger(availableNow=True)
+        return writer.start()
+
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", _SHUFFLE_PARTITIONS):
+        _drain(start, process_all=drain == "process_all").stop()
+    return spark.table(names[-1])
+
+
+def run_foreach_batch(
+    streaming_df: DataFrame,
+    process_batch,
+    checkpoint_dir: str,
+    output_mode: str = "append",
+) -> None:
+    """Drain a streaming DataFrame through ``foreachBatch(process_batch)``
+    with Trigger.AvailableNow, checkpointed at ``checkpoint_dir``.
+
+    A retry resumes that checkpoint: the batches the failed attempt
+    committed are not re-run, and the one it was inside replays under
+    its ORIGINAL batch id and the same input files. ``process_batch``
+    must therefore make a replayed batch id land once — a sink's
+    batch-id WAL (``UpsertParquetSink``) or a merge that is idempotent
+    by construction (set union). Restarting on a fresh checkpoint
+    instead would renumber batches from 0 against the sink's WAL, and
+    the file source's batch composition is not guaranteed stable
+    between attempts, so a not-yet-ingested file could land under a
+    WAL-skipped id and silently drop."""
+
+    def start():
+        return (
+            streaming_df.writeStream.outputMode(output_mode)
+            .trigger(availableNow=True)
+            .option("checkpointLocation", checkpoint_dir)
+            .foreachBatch(process_batch)
+            .start()
+        )
+
+    spark = streaming_df.sparkSession
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", _SHUFFLE_PARTITIONS):
+        _drain(start)
 
 
 def run_stream_to_upsert(
@@ -249,8 +326,6 @@ def run_stream_to_upsert(
     table_dir: str,
     key_cols: list[str],
     output_mode: str = "update",
-    timeout_sec: int = 120,
-    shuffle_partitions: int = 8,
     num_buckets: int = 16,
 ) -> DataFrame:
     """Drive a streaming DataFrame through a keyed ``UpsertParquetSink``
@@ -266,69 +341,17 @@ def run_stream_to_upsert(
     resolution keeps the latest (highest-sorting) value per key, so a
     window re-emitted with a larger count converges to the final one.
     Replayed micro-batches are exactly-once no-ops via the sink's batch
-    WAL (sinks/upsert.py)."""
-    import os
-    import shutil
-
+    WAL (sinks/upsert.py). The query's checkpoint lives in a temp dir
+    made for this call (a retry resumes it) and removed on return."""
     from motorway_spark.sinks.upsert import UpsertParquetSink
 
     spark = streaming_df.sparkSession
     sink = UpsertParquetSink(spark, table_dir, key_cols=key_cols, num_buckets=num_buckets)
-    # The flake retry below wipes table_dir — destructive-only for state
-    # THIS call created. A pre-existing non-empty table (a standing
-    # serving table, or data from a non-replayable source whose commits
-    # already fired) must never be rmtree'd by a retry: record it now
-    # and refuse the wipe later.
-    preexisting = os.path.isdir(table_dir) and bool(os.listdir(table_dir))
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    ckpt = tempfile.mkdtemp(prefix="upsert_ckpt_")
     try:
-        # same Python-worker connect-flake retry as run_stream_to_memory.
-        # The retry starts a BRAND-NEW query whose batch ids restart at 0,
-        # but the sink's batch-id WAL is per-TABLE — batches committed by
-        # the failed first attempt would suppress the new query's
-        # same-numbered batches even if their composition differs, so the
-        # table dir (data + WAL) is wiped before the restart and the
-        # deterministic finite source rebuilds it from scratch. If the
-        # table pre-existed this call, that wipe would destroy data the
-        # runner doesn't own (turning exactly-once into at-most-once for
-        # a non-replayable source) — re-raise the flake instead and let
-        # the caller decide.
-        for attempt in (1, 2):
-            if attempt > 1:
-                if preexisting:
-                    raise RuntimeError(
-                        f"retry would wipe pre-existing table {table_dir}; "
-                        "refusing — restart the query with its own "
-                        "checkpointLocation to resume batch ids instead"
-                    )
-                shutil.rmtree(table_dir, ignore_errors=True)
-            query = (
-                streaming_df.writeStream.outputMode(output_mode)
-                .trigger(availableNow=True)
-                .foreachBatch(sink.foreach_batch())
-                .start()
-            )
-            try:
-                # False = timed out (no exception): a partial MERGE must
-                # be an error, not a silently short table
-                if not query.awaitTermination(timeout_sec):
-                    raise TimeoutError(
-                        f"stream did not drain within {timeout_sec}s"
-                    )
-                break
-            except Exception as exc:  # noqa: BLE001
-                if attempt == 1 and "Python worker" in str(exc):
-                    continue
-                raise
-            finally:
-                if query.isActive:
-                    query.stop()
+        run_foreach_batch(streaming_df, sink.foreach_batch(), ckpt, output_mode)
     finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        else:
-            spark.conf.unset("spark.sql.shuffle.partitions")
+        shutil.rmtree(ckpt, ignore_errors=True)
     out = sink.read()
     if out is None:
         raise RuntimeError(f"stream produced no batches into {table_dir}")

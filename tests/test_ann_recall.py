@@ -130,12 +130,12 @@ def test_stream_ann_ingest_is_multi_batch(spark):
     split x maxFilesPerTrigger=1), not a single-batch replay — and the
     drained search equals the batch operator (the oracle covers that;
     this pins the multi-batch mechanics the oracle can't see)."""
-    from motorway_spark.queries import streaming_queries as sq
     from motorway_spark.sinks.upsert import UpsertParquetSink
+    from motorway_spark.streaming.runner import _SCRATCH_DIRS
 
     df = QUERIES["stream_ann_ingest"](spark, SF)
     assert df.count() > 0
-    root = sq._LAST_ANN_INGEST_DIR
+    root = _SCRATCH_DIRS["stream_ann_ingest"]
     sink = UpsertParquetSink(
         spark, f"{root}/codes", key_cols=["vec_id"], num_buckets=8
     )

@@ -206,7 +206,7 @@ def test_stream_matches_batch(spark, tmp_path):
         .option("checkpointLocation", str(tmp_path / "ckpt_parity"))
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     streamed = _rows(spark.sql("SELECT * FROM cf_parity"))
     assert streamed == _rows(sink.read_changes())
 
@@ -230,7 +230,7 @@ def test_stream_restart_resumes_exactly_once(spark, tmp_path):
             .option("checkpointLocation", ckpt)
             .start()
         )
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
         q.stop()
         return _rows(spark.read.parquet(out).select("k", "v", *CDC))
 
@@ -264,7 +264,7 @@ def test_stream_since_seq_skips_history(spark, tmp_path):
         .option("checkpointLocation", str(tmp_path / "ckpt_since"))
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     got = _rows(spark.sql("SELECT * FROM cf_since"))
     assert got == [(50, "w", "insert", head + 1)]
 
@@ -298,7 +298,7 @@ def test_matview_incremental_multi_batch_group_moves_and_death(
             .option("checkpointLocation", ckpt)
             .start()
         )
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
         q.stop()
         df = mv.read()
         return (

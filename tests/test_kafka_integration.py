@@ -119,7 +119,7 @@ def _read_topic(spark, topic: str, checkpoint: str, table: str):
         .trigger(availableNow=True)
         .start()
     )
-    query.awaitTermination(120)
+    assert query.awaitTermination(120)
     if query.isActive:
         query.stop()
     return spark.table(table)

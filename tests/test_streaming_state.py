@@ -103,10 +103,10 @@ def test_checkpoint_restart_no_duplicates(spark, tmp_path):
         )
 
     q = start_query()
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     write_file(1)
     q2 = start_query()  # restart from checkpoint; only new file processed
-    q2.awaitTermination(120)
+    assert q2.awaitTermination(120)
     counts = {r["key"]: r["count"] for r in spark.table(out_name).collect()}
     assert sum(counts.values()) == 20  # 2 files x 10 rows, no double-count
 

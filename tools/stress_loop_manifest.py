@@ -1,9 +1,8 @@
 import os, sys, threading, tempfile, time, traceback
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-from pyspark.sql import SparkSession, Row
-spark = (SparkSession.builder.master("local[32]")
-         .config("spark.sql.shuffle.partitions", "8")
-         .config("spark.ui.enabled", "false").getOrCreate())
+from pyspark.sql import Row
+from motorway_spark import get_session
+spark = get_session("stress-loop-manifest", shuffle_partitions=8)
 spark.sparkContext.setLogLevel("ERROR")
 from motorway_spark.sinks import UpsertParquetSink
 import json
